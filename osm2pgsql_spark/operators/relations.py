@@ -401,7 +401,15 @@ def relation_multilinestrings(
     mw = member_way_points(relations, ways, nodes)
     if kernel_partitions:
         mw = mw.repartition(kernel_partitions, "rel_id")
-    grouped = mw.groupBy("rel_id").agg(F.collect_list("line_wkb").alias("member_wkbs"))
+    # member order, not row-arrival order: line_merge starts a closed
+    # loop at its first part, and collect_list after a shuffle follows
+    # whatever order the rows arrive in
+    grouped = mw.groupBy("rel_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("member_pos", "line_wkb"))),
+            lambda s: s["line_wkb"],
+        ).alias("member_wkbs")
+    )
     udf = _get_udf("ml", _ml_kernel)
     return grouped.select("rel_id", udf(F.col("member_wkbs")).alias("geom"))
 

@@ -350,3 +350,51 @@ def test_polygon_parts_kernel_evaluated_once(spark):
         if "EvalPython" in line and "wkbs(" in line
     )
     assert n_kernel_evals == 1, f"parts kernel evaluated {n_kernel_evals}x:\n{plan}"
+
+
+def test_multilinestring_ring_start_independent_of_row_order(spark):
+    """A closed boundary ring is stitched in member order: it starts
+    at the first node of its lowest-member_pos member, whatever order
+    the member rows reach the per-relation aggregation in (collect_list
+    after a shuffle follows row-arrival order, and line_merge starts a
+    closed loop at its first part)."""
+    coords = {1: (0.0, 0.0), 2: (2.0, 0.0), 3: (3.0, 1.0),
+              4: (2.0, 2.0), 5: (0.0, 2.0), 6: (-1.0, 1.0)}
+    node_rows = [(i, y, x, None, None, None, None, None, None, None)
+                 for i, (x, y) in coords.items()]
+    # way ids run against member order, so an id-ordered join hands
+    # the members over last-first
+    way_rows = [
+        (30, [1, 2, 3], {}, None, None, None, None, None, None),
+        (20, [3, 4, 5], {}, None, None, None, None, None, None),
+        (10, [5, 6, 1], {}, None, None, None, None, None, None),
+    ]
+    rels = spark.createDataFrame(
+        [(9, [("w", 30, ""), ("w", 20, ""), ("w", 10, "")],
+          {"type": "boundary"}, None, None, None, None, None, None)],
+        RELATION_SCHEMA,
+    )
+
+    def geom(nodes, ways, **kw):
+        rows = relation_multilinestrings(rels, ways, nodes, **kw).collect()
+        assert len(rows) == 1
+        return bytes(rows[0]["geom"])
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # sort-merge joins: rows leave in way-id order
+    try:
+        a = geom(spark.createDataFrame(node_rows, NODE_SCHEMA),
+                 spark.createDataFrame(way_rows, WAY_SCHEMA))
+        b = geom(spark.createDataFrame(node_rows[::-1], NODE_SCHEMA).repartition(3),
+                 spark.createDataFrame(way_rows[::-1], WAY_SCHEMA).repartition(3),
+                 kernel_partitions=3)
+    finally:
+        spark.conf.set(key, old)
+    assert a == b
+    kind, parts = G.from_wkb(a)
+    assert kind == "multilinestring" and len(parts) == 1
+    ring = parts[0]
+    assert ring.shape[0] == 7 and tuple(ring[0]) == tuple(ring[-1])
+    assert tuple(ring[0]) == coords[1]
+    assert tuple(ring[1]) == coords[2]
