@@ -34,12 +34,16 @@ from osm2pgsql_spark.operators import assembly
 
 
 def member_way_points(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame
+    relations: DataFrame, ways: DataFrame | None, nodes: DataFrame | None,
+    way_points: DataFrame | None = None,
 ) -> DataFrame:
     """(rel_id, member_pos, role, way_id, line_wkb) — each relation's
     member ways as assembled linestring WKB.
 
     relations follow model.RELATION_SCHEMA (members array of structs).
+    way_points: the (way_id, pts) point lists from
+    assembly.assemble_points, when the caller has already built them;
+    without it they are assembled here from ways and nodes.
     """
     m = relations.select(
         F.col("id").alias("rel_id"),
@@ -47,11 +51,13 @@ def member_way_points(
     ).where(F.col("m.type") == "w").select(
         "rel_id", "member_pos", F.col("m.ref").alias("way_id"), F.col("m.role").alias("role")
     )
-    refs = ways.select(F.col("id").alias("way_id"), F.posexplode("refs").alias("pos", "ref"))
-    nloc = nodes.select(F.col("id").alias("node_id"), "lon", "lat")
-    wpts = assembly.assemble_points(
-        refs, nloc, way_id="way_id", pos="pos", ref="ref", node_id="node_id", x="lon", y="lat"
-    ).select("way_id", "pts")
+    if way_points is None:
+        refs = ways.select(F.col("id").alias("way_id"), F.posexplode("refs").alias("pos", "ref"))
+        nloc = nodes.select(F.col("id").alias("node_id"), "lon", "lat")
+        way_points = assembly.assemble_points(
+            refs, nloc, way_id="way_id", pos="pos", ref="ref", node_id="node_id", x="lon", y="lat"
+        )
+    wpts = way_points.select("way_id", "pts")
     # member geometry travels as WKB binary: Arrow round-trips flat
     # binary lists cheaply, while ragged array<array<struct>> nesting
     # is both slower and unsupported in pandas-UDF conversion.
@@ -262,8 +268,9 @@ def _get_udf(name: str, kernel) -> object:
 
 
 def grouped_member_wkbs(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame,
+    relations: DataFrame, ways: DataFrame | None, nodes: DataFrame | None,
     kernel_partitions: int | None = None,
+    way_points: DataFrame | None = None,
 ) -> DataFrame:
     """(rel_id, member_wkbs ARRAY<BINARY>) — the assembled member-way
     lines per relation.  The shared input of every ring-assembly
@@ -275,8 +282,9 @@ def grouped_member_wkbs(
     repartition by rel_id before the groupBy so the downstream
     ring-assembly kernels inherit compute-sized partitions instead of
     AQE's byte-sized 1-2 at small data (no extra Exchange: Catalyst
-    reuses the user partitioning for the aggregation)."""
-    mw = member_way_points(relations, ways, nodes)
+    reuses the user partitioning for the aggregation).
+    way_points: as in member_way_points."""
+    mw = member_way_points(relations, ways, nodes, way_points)
     if kernel_partitions:
         mw = mw.repartition(kernel_partitions, "rel_id")
     return mw.groupBy("rel_id").agg(
@@ -382,8 +390,9 @@ def relation_polygon_parts(
 
 
 def relation_multilinestrings(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame, merge: bool = True,
-    kernel_partitions: int | None = None,
+    relations: DataFrame, ways: DataFrame | None, nodes: DataFrame | None,
+    merge: bool = True, kernel_partitions: int | None = None,
+    way_points: DataFrame | None = None,
 ) -> DataFrame:
     """(rel_id, geom WKB multilinestring), line-merged (route/boundary
     relations; reference as_multilinestring + line_merge).
@@ -397,8 +406,9 @@ def relation_multilinestrings(
     leaves user-specified partition counts alone, so the kernel runs
     P-way at zero added shuffle cost.  None keeps byte-sized
     partitioning (right when the output feeds more shuffles, or at
-    scales where byte-sizing already yields wide plans)."""
-    mw = member_way_points(relations, ways, nodes)
+    scales where byte-sizing already yields wide plans).
+    way_points: as in member_way_points."""
+    mw = member_way_points(relations, ways, nodes, way_points)
     if kernel_partitions:
         mw = mw.repartition(kernel_partitions, "rel_id")
     # member order, not row-arrival order: line_merge starts a closed

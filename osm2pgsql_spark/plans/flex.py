@@ -26,6 +26,7 @@ continues: src/flex-write.cpp:40-50).
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -553,6 +554,7 @@ class FlexConfig:
         rule via relation_geometry.  Declared srid 3857 reprojects.
         """
         from osm2pgsql_spark.operators import assembly
+        from osm2pgsql_spark.operators.iterate import checkpoint
 
     # (keep import local: assembly pulls pandas)
 
@@ -587,7 +589,10 @@ class FlexConfig:
             "relation": relations,
         }
 
-        if way_geoms is None and ways is not None and nodes is not None:
+        # way point lists assembled here also feed relation assembly; a
+        # caller's way_geoms may cover only some ways, so those do not
+        own_way_points = way_geoms is None and ways is not None and nodes is not None
+        if own_way_points:
             refs = ways.select(
                 F.col("id").alias("way_id"), F.posexplode("refs").alias("pos", "ref")
             )
@@ -597,9 +602,49 @@ class FlexConfig:
                 node_id="node_id", x="lon", y="lat",
             )
 
-        # relation member geometry, built once per assembly kind and
-        # shared by every relation rule that needs it
-        rel_geom_cache: dict[str, DataFrame] = {}
+        # A rule reads its entity frame joined with the geometry it needs:
+        # "way" (way point lists) or a relation assembly kind.  Each such
+        # frame is built once per run; one read by two or more rules,
+        # tables or assemblies is materialized once, one with a single
+        # reader stays lazy and keeps its plan.
+        readers = Counter(
+            self._geometry_source(r) for r in self.rules
+            if self.tables[r.table].geom_columns() and sources[r.kind] is not None
+        )
+        if "way" in self.callbacks:
+            readers["way"] += 1
+        if own_way_points and relations is not None:
+            readers["way"] += sum(k in readers for k in ("multipolygon", "multilinestring"))
+        joined: dict[str, DataFrame] = {}
+
+        def with_geometry(key: str) -> DataFrame:
+            if key not in joined:
+                if key == "way":
+                    src = sources["way"]
+                    df = src.join(
+                        way_geoms.withColumnRenamed("way_id", "__gid"),
+                        src["id"] == F.col("__gid"),
+                        "left",
+                    )
+                else:
+                    rg = rel_geoms(key)
+                    if rg is not None:
+                        df = relations.join(rg, relations["id"] == F.col("__gid"), "left")
+                    else:
+                        # assembly inputs missing: geometry resolves to
+                        # NULL instead of an unresolvable column
+                        df = relations.withColumn("__rel_geom", F.lit(None).cast("binary"))
+                if readers[key] >= 2:
+                    df = checkpoint(df)
+                joined[key] = df
+            return joined[key]
+
+        def relation_way_points() -> DataFrame | None:
+            if not own_way_points:
+                return None
+            if readers["way"] >= 2:
+                return with_geometry("way").select(F.col("id").alias("way_id"), "pts")
+            return way_geoms
 
         def rel_geoms(which: str) -> DataFrame | None:
             # multipoint assembly needs only node members; the other
@@ -607,28 +652,34 @@ class FlexConfig:
             need_ways = which != "multipoint"
             if relations is None or nodes is None or (need_ways and ways is None):
                 return None
-            if which not in rel_geom_cache:
-                from osm2pgsql_spark.operators.relations import (
-                    relation_collections,
-                    relation_multilinestrings,
-                    relation_multipoints,
-                    relation_multipolygons,
-                )
+            from osm2pgsql_spark.operators.relations import (
+                grouped_member_wkbs,
+                relation_collections,
+                relation_multilinestrings,
+                relation_multipoints,
+                relation_multipolygons,
+            )
 
-                if which == "multipoint":
-                    built = relation_multipoints(relations, nodes)
-                elif which == "geometrycollection":
-                    built = relation_collections(relations, ways, nodes)
-                elif which == "multipolygon":
-                    built = relation_multipolygons(relations, ways, nodes)
-                else:
-                    built = relation_multilinestrings(relations, ways, nodes)
-                rel_geom_cache[which] = built.select(
-                    F.col("rel_id").alias("__gid"), F.col("geom").alias("__rel_geom")
-                )
-            return rel_geom_cache[which]
+            if which == "multipoint":
+                built = relation_multipoints(relations, nodes)
+            elif which == "geometrycollection":
+                built = relation_collections(relations, ways, nodes)
+            elif which == "multipolygon":
+                built = relation_multipolygons(
+                    None, grouped=grouped_member_wkbs(
+                        relations, ways, nodes, way_points=relation_way_points()))
+            else:
+                built = relation_multilinestrings(
+                    relations, ways, nodes, way_points=relation_way_points())
+            return built.select(
+                F.col("rel_id").alias("__gid"), F.col("geom").alias("__rel_geom")
+            )
 
-        cb_df = self._run_callbacks(sources, way_geoms)
+        has_way_frame = ways is not None and way_geoms is not None
+        cb_df = self._run_callbacks(
+            sources,
+            with_geometry("way") if "way" in self.callbacks and has_way_frame else None,
+        )
 
         out: dict[str, DataFrame] = {}
         for table_name, tdef in self.tables.items():
@@ -637,24 +688,12 @@ class FlexConfig:
                 continue
             parts: list[DataFrame] = []
             for rule in rules:
-                src = sources[rule.kind]
-                if src is None:
+                df = sources[rule.kind]
+                if df is None:
                     continue
-                df = src
-                if rule.kind == "way" and tdef.geom_columns() and way_geoms is not None:
-                    df = df.join(
-                        way_geoms.withColumnRenamed("way_id", "__gid"),
-                        df["id"] == F.col("__gid"),
-                        "left",
-                    )
-                elif rule.kind == "relation" and tdef.geom_columns():
-                    rg = rel_geoms(rule.relation_geometry)
-                    if rg is not None:
-                        df = df.join(rg, df["id"] == F.col("__gid"), "left")
-                    else:
-                        # assembly inputs missing: geometry resolves to
-                        # NULL instead of an unresolvable column
-                        df = df.withColumn("__rel_geom", F.lit(None).cast("binary"))
+                key = self._geometry_source(rule) if tdef.geom_columns() else None
+                if key is not None and (key != "way" or has_way_frame):
+                    df = with_geometry(key)
                 if rule.when is not None:
                     df = df.where(rule.when)
                 # multi-geometry splitting (reference flex semantics:
@@ -756,9 +795,20 @@ class FlexConfig:
                 out[table_name] = result
         return out
 
-    def _run_callbacks(self, sources, way_geoms) -> DataFrame | None:
+    @staticmethod
+    def _geometry_source(rule: Rule) -> str | None:
+        """The geometry a rule's entity frame is joined with: "way"
+        (way point lists), a relation assembly kind, or None (nodes)."""
+        if rule.kind == "way":
+            return "way"
+        if rule.kind == "relation":
+            return rule.relation_geometry
+        return None
+
+    def _run_callbacks(self, sources, way_frame) -> DataFrame | None:
         """mapInPandas execution of registered process() callbacks into
-        one unified frame (tbl, osm_kind, osm_id, vals, geom)."""
+        one unified frame (tbl, osm_kind, osm_id, vals, geom).
+        way_frame: the ways joined with their point lists, if any."""
         if not self.callbacks:
             return None
         import pandas as pd  # noqa: F401  (needed by the workers)
@@ -777,13 +827,10 @@ class FlexConfig:
             if kind == "node":
                 prep = src.select("id", "tags", "lon", "lat", *attrs)
             elif kind == "way":
-                prep = src.select("id", "tags", "refs", *attrs)
-                if way_geoms is not None:
-                    prep = prep.join(
-                        way_geoms.withColumnRenamed("way_id", "__gid"),
-                        prep["id"] == F.col("__gid"),
-                        "left",
-                    ).drop("__gid")
+                if way_frame is not None:
+                    prep = way_frame.select("id", "tags", "refs", *attrs, "pts")
+                else:
+                    prep = src.select("id", "tags", "refs", *attrs)
             else:
                 prep = src.select("id", "tags", "members", *attrs)
             frames.append(

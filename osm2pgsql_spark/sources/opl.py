@@ -13,9 +13,11 @@ Format (fields space-separated, one-letter prefixes):
   N n<id>,n<id>,...  way node refs
   M <t><id>@<role>,...  relation members
 
-Parsing happens driver-side for small fixture files, or distributed
-via spark.read.text + the same per-line parser for big ones (OPL is
-line-delimited, hence trivially splittable — unlike XML).
+The whole file is parsed on the driver, line by line, into three
+lists that become the (nodes, ways, relations) trio through
+createDataFrame.  Every job that reads the trio unpickles the whole
+extract again in the JVM, so the import tool consumes it once, by the
+middle write, and reads everything after that from the middle.
 """
 
 from __future__ import annotations

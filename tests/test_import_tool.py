@@ -9,6 +9,7 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF_DIR = "/root/testdata/sf0.001"
 
 OPL = """n1 Tamenity=pub,name=A x9.0 y50.0
 n2 x9.001 y50.0
@@ -214,6 +215,139 @@ def test_create_drop_removes_middle_and_blocks_append(tmp_path):
     r = _run([str(osc), str(out), "--append"])
     assert r.returncode != 0
     assert "incompatible" in (r.stderr + r.stdout)
+
+
+# --- create: tables read from the middle, shared geometry built once
+
+# every generic table gets rows: tagged nodes, a line, an area way, a
+# route, a boundary ring of three untagged ways, and a multipolygon
+# whose hole is its own closed way
+OPL_ALL = """n1 v1 t2024-01-01T00:00:00Z Tamenity=cafe,name=A x9.0 y50.0
+n2 Tshop=bakery x9.01 y50.0
+n3 x9.02 y50.0
+n4 x9.03 y50.0
+n5 x9.04 y50.0
+n10 x9.1 y50.1
+n11 x9.11 y50.1
+n12 x9.11 y50.11
+n13 x9.1 y50.11
+n20 x9.2 y50.2
+n21 x9.3 y50.2
+n22 x9.3 y50.3
+n23 x9.2 y50.3
+n24 x9.24 y50.24
+n25 x9.26 y50.24
+n26 x9.26 y50.26
+n27 x9.24 y50.26
+n40 x9.5 y50.5
+n41 x9.6 y50.5
+n42 x9.6 y50.6
+n43 x9.55 y50.65
+n44 x9.5 y50.6
+w1 Thighway=residential,name=Main Nn3,n4
+w2 Thighway=primary Nn4,n5
+w3 v2 t2024-03-01T12:00:00Z Tbuilding=yes Nn10,n11,n12,n13,n10
+w20 Nn20,n21,n22
+w21 Nn22,n23,n20
+w22 Nn24,n25,n26,n27,n24
+w40 Nn40,n41,n42
+w41 Nn42,n43,n44
+w42 Nn44,n40
+r100 Ttype=multipolygon,natural=wood Mw20@outer,w21@outer,w22@inner
+r101 Ttype=route,route=bus,ref=1 Mw1@,w2@
+r102 Ttype=boundary,boundary=administrative,admin_level=8 Mw41@outer,w42@outer,w40@outer
+"""
+
+GENERIC_TABLES = ("points", "lines", "polygons", "routes", "boundaries")
+
+
+def _load_tool():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "import_tool", os.path.join(REPO, "tools", "import_tool.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _rows(df):
+    """A table as a sorted multiset of rows, columns in name order."""
+    cols = sorted(df.columns)
+    return sorted(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+        for row in df.select(cols).collect()
+    )
+
+
+def test_create_tables_equal_generic_import_in_memory(tmp_path, spark):
+    """cmd_create builds its tables from the middle it has just written,
+    with the shared geometry materialized once; the five tables are the
+    same row multisets as the generic style run straight on the parsed
+    frames."""
+    import argparse
+
+    from examples.generic_import import generic_import
+    from osm2pgsql_spark.sources.opl import read_opl
+
+    src = tmp_path / "in.opl"
+    src.write_text(OPL_ALL)
+    out = tmp_path / "db"
+    args = argparse.Namespace(input=str(src), out_dir=str(out), bbox=None,
+                              style=None, pg=None, drop=False)
+    _load_tool().cmd_create(args, spark)
+    direct = generic_import(spark, *read_opl(spark, OPL_ALL.splitlines()))
+    assert set(direct) == set(GENERIC_TABLES)
+    for name in GENERIC_TABLES:
+        written = _rows(spark.read.parquet(str(out / "tables" / name)))
+        assert written, name
+        assert written == _rows(direct[name]), name
+    import json
+
+    props = json.load(open(out / "properties.json"))
+    assert props["current_timestamp"] == "2024-03-01T12:00:00Z"
+
+
+def _checkpoints(df) -> set:
+    """Ids of the materialized (locally checkpointed) relations a
+    DataFrame's plan reads."""
+    ids = set()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (leaf.getClass().getSimpleName() == "LogicalRDD"
+                and "LocalCheckpointRDD" in leaf.rdd().toDebugString()):
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def test_generic_import_shares_one_materialized_way_relation(tmp_path, spark):
+    """lines and polygons both read the ways joined with their point
+    lists, and polygons' multipolygon assembly reads the same points:
+    that relation is materialized once and both plans scan it.  routes
+    and boundaries share the materialized multilinestring geometry.
+    A rule set with one reader keeps a lazy plan (flex_generic_lines)."""
+    from examples.generic_import import generic_import
+    from osm2pgsql_spark.queries import q_flex_generic_lines
+    from osm2pgsql_spark.sources.opl import read_opl
+
+    # parquet inputs, as cmd_create reads them from the middle: their
+    # plans have no RDD leaves of their own
+    frames = []
+    for name, df in zip(("nodes", "ways", "rels"),
+                        read_opl(spark, OPL_ALL.splitlines())):
+        path = str(tmp_path / name)
+        df.write.parquet(path)
+        frames.append(spark.read.parquet(path))
+    tables = generic_import(spark, *frames)
+    ck = {name: _checkpoints(df) for name, df in tables.items()}
+    assert ck["points"] == set()
+    assert len(ck["lines"]) == 1
+    assert ck["polygons"] == ck["lines"]
+    assert len(ck["routes"]) == 1
+    assert ck["boundaries"] == ck["routes"]
+    assert ck["routes"] != ck["lines"]
+    assert _checkpoints(q_flex_generic_lines(spark, SF_DIR)) == set()
 
 
 # --- append-only ids=nil log tables (track-changes.lua) -------------

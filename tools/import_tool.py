@@ -338,11 +338,17 @@ def _middle(out_dir: str, name: str):
 
 
 def _write_tables(tables: dict[str, DataFrame], out_dir: str) -> dict[str, int]:
+    from pyspark.sql import Observation
+
     counts = {}
     for name, df in tables.items():
         path = os.path.join(out_dir, "tables", name)
-        df.write.mode("overwrite").parquet(path)
-        counts[name] = df.sparkSession.read.parquet(path).count()
+        # the row count rides on the write job, instead of three more
+        # jobs to infer the written schema and count it back
+        rows = Observation(f"rows:{name}")
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").parquet(path)
+        counts[name] = rows.get["n"]
     return counts
 
 
@@ -437,15 +443,13 @@ def expire_tiles_of(
 
 def _data_timestamp(frames) -> "datetime.datetime | None":
     """Newest object timestamp across the input frames (the session
-    runs in UTC, so the naive max is a UTC wall time)."""
-    best = None
-    for df in frames:
-        if "ts" not in df.columns:
-            continue
-        v = df.agg(F.max("ts")).first()[0]
-        if v is not None and (best is None or v > best):
-            best = v
-    return best
+    runs in UTC, so the naive max is a UTC wall time), in one job."""
+    stamps = [df.select("ts") for df in frames if "ts" in df.columns]
+    if not stamps:
+        return None
+    for df in stamps[1:]:
+        stamps[0] = stamps[0].unionByName(df)
+    return stamps[0].agg(F.max("ts")).first()[0]
 
 
 _BBOX_NUM_RE = re.compile(
@@ -525,9 +529,17 @@ def cmd_create(args, spark) -> None:
             .distinct()
         )
         nodes = nodes.join(closure, "id", "leftsemi")
-    # slim middle (bucketed for append partition pruning)
+    # slim middle (bucketed for append partition pruning).  Everything
+    # after the write reads the middle's own frames, as the reference
+    # fetches node locations through its middle: the parsed frames are
+    # consumed once, here, and every later job scans parquet instead of
+    # re-deriving them from the parse
     for name, df in (("nodes", nodes), ("ways", ways), ("rels", rels)):
         _middle(args.out_dir, name).write_full(df)
+    nodes, ways, rels = (
+        _middle(args.out_dir, name).read(spark) for name in ("nodes", "ways", "rels"))
+    # newest object timestamp, taken before --drop removes the middle
+    data_ts = _data_timestamp((nodes, ways, rels))
     out_backend = getattr(args, "output", "flex")
     if out_backend == "null":
         # reference output-null.cpp: parse the input, keep the middle
@@ -627,7 +639,6 @@ def cmd_create(args, spark) -> None:
     # ('current_timestamp') and any replication headers from a PBF
     # input — osm2pgsql-replication init reads both (properties.cpp,
     # scripts/osm2pgsql-replication:167-193)
-    data_ts = _data_timestamp((nodes, ways, rels))
     if data_ts is not None:
         props.set("current_timestamp", data_ts.strftime("%Y-%m-%dT%H:%M:%SZ"))
     if args.input.endswith((".pbf", ".osm.pbf")):
