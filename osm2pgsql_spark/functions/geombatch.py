@@ -357,7 +357,7 @@ def batch_multi_part_stats(vals: Sequence) -> pd.DataFrame:
             n_parts[i], max_pts[i] = 1, 1
         elif c == 2:
             n_parts[i] = 1
-            max_pts[i] = int(pc[p0s[i]]) if pks[i] else 0
+            max_pts[i] = int(pc[p0s[i]])
         elif c == 3:
             # a single polygon splits to itself: one part whose
             # n_points is the sum over its rings
