@@ -545,6 +545,8 @@ class FlexConfig:
         nodes/ways/relations follow model.NODE/WAY/RELATION_SCHEMA.
         way_geoms: optional pre-assembled (id, pts) from
         operators.assembly (the runner builds it if ways+nodes given).
+        Point lists the runner builds also feed relation assembly; a
+        caller's way_geoms feeds way rules and callbacks only.
 
         Geometry columns: for node rules, point geometry from lon/lat;
         for way rules, linestring/polygon WKB from assembled points;
@@ -589,8 +591,8 @@ class FlexConfig:
             "relation": relations,
         }
 
-        # way point lists assembled here also feed relation assembly; a
-        # caller's way_geoms may cover only some ways, so those do not
+        # a caller's way_geoms may cover only some ways, so only point
+        # lists built here feed relation assembly
         own_way_points = way_geoms is None and ways is not None and nodes is not None
         if own_way_points:
             refs = ways.select(

@@ -443,13 +443,14 @@ def expire_tiles_of(
 
 def _data_timestamp(frames) -> "datetime.datetime | None":
     """Newest object timestamp across the input frames (the session
-    runs in UTC, so the naive max is a UTC wall time), in one job."""
+    runs in UTC, so the naive max is a UTC wall time), in one pass."""
     stamps = [df.select("ts") for df in frames if "ts" in df.columns]
     if not stamps:
         return None
+    allts = stamps[0]
     for df in stamps[1:]:
-        stamps[0] = stamps[0].unionByName(df)
-    return stamps[0].agg(F.max("ts")).first()[0]
+        allts = allts.unionByName(df)
+    return allts.agg(F.max("ts")).first()[0]
 
 
 _BBOX_NUM_RE = re.compile(
