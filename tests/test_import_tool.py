@@ -8,8 +8,9 @@ import sys
 
 import pytest
 
+from conftest import SF_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = "/root/testdata/sf0.001"
 
 OPL = """n1 Tamenity=pub,name=A x9.0 y50.0
 n2 x9.001 y50.0
