@@ -497,7 +497,8 @@ def batch_reverse(vals: Sequence) -> pd.Series:
 
 
 def batch_point_wkb(lon: pd.Series, lat: pd.Series, srid: pd.Series) -> pd.Series:
-    """Twin of _point_wkb: (lon, lat, srid) -> point WKB, nulls kept."""
+    """(lon, lat, srid) -> point WKB, nulls kept: the batch twin of
+    to_wkb(make_point(lon, lat)) [+ transform_4326_to_3857]."""
     n = len(lon)
     bad = (lon.isna() | lat.isna()).to_numpy()
     x = lon.to_numpy(dtype="f8", na_value=np.nan, copy=True)
@@ -508,10 +509,7 @@ def batch_point_wkb(lon: pd.Series, lat: pd.Series, srid: pd.Series) -> pd.Serie
     A = np.column_stack([x, y])
     is3857 = code == 3857
     if is3857.any():
-        # same elementwise formulas as G.transform_4326_to_3857
-        tx = np.radians(A[:, 0]) * G.EARTH_RADIUS
-        ty = np.log(np.tan(np.pi / 4.0 + np.radians(A[:, 1]) / 2.0)) * G.EARTH_RADIUS
-        A = np.where(is3857[:, None], np.column_stack([tx, ty]), A)
+        A = np.where(is3857[:, None], G.mercator_forward(A), A)
     A = np.ascontiguousarray(A, dtype="<f8")
     buf = A.tobytes()
     out: list = [None] * n
@@ -527,17 +525,7 @@ def _transform_batch(vals: Sequence, fwd: bool) -> pd.Series:
     sc = _Scan(vals)
     out: list = [None] * sc.n
     C = sc.coords
-    R = G.EARTH_RADIUS
-    if fwd:
-        def f(a):
-            x = np.radians(a[:, 0]) * R
-            y = np.log(np.tan(np.pi / 4.0 + np.radians(a[:, 1]) / 2.0)) * R
-            return np.column_stack([x, y])
-    else:
-        def f(a):
-            lon = np.degrees(a[:, 0] / R)
-            lat = np.degrees(2.0 * np.arctan(np.exp(a[:, 1] / R)) - np.pi / 2.0)
-            return np.column_stack([lon, lat])
+    f = G.mercator_forward if fwd else G.mercator_inverse
     TB = np.ascontiguousarray(f(C), dtype="<f8").tobytes() if C.shape[0] else b""
     # all point rows transformed in one call (same elementwise formula
     # the scalar path applies to each row's (1,2) array)

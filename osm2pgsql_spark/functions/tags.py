@@ -102,6 +102,14 @@ def cast_double(v: Column) -> Column:
     ).otherwise(F.lit(None).cast("double"))
 
 
+def _by_highway(highway: Column, values: dict) -> Column:
+    """values[highway] as one literal-map lookup, null for other
+    values.  One reference to `highway`: a per-class `when` chain
+    copies the highway expression (often a whole tag-map expression)
+    into every branch once Catalyst inlines it."""
+    return F.create_map(*[F.lit(x) for kv in values.items() for x in kv])[highway]
+
+
 def z_order(
     highway: Column,
     layer: Column | None = None,
@@ -115,10 +123,8 @@ def z_order(
     z: Column = F.lit(0)
     if layer is not None:
         z = z + F.coalesce(cast_integer(layer, "int4"), F.lit(0)) * 100
-    hw = F.lit(0)
-    for name, offset, _roads in reversed(HIGHWAY_LAYERS):
-        hw = F.when(highway == name, F.lit(offset)).otherwise(hw)
-    z = z + hw
+    offset = {name: off for name, off, _roads in HIGHWAY_LAYERS}
+    z = z + F.coalesce(_by_highway(highway, offset), F.lit(0))
     if railway is not None:
         z = z + F.when(railway.isNotNull() & (railway != ""), F.lit(35)).otherwise(F.lit(0))
     if bridge is not None:
@@ -131,9 +137,8 @@ def z_order(
 def roads_flag(highway: Column, railway: Column | None = None, boundary: Column | None = None) -> Column:
     """The legacy 'roads table' membership flag
     (src/tagtransform-c.cpp:59-77)."""
-    r: Column = F.lit(False)
-    for name, _offset, is_road in reversed(HIGHWAY_LAYERS):
-        r = F.when(highway == name, F.lit(is_road)).otherwise(r)
+    is_road = {name: road for name, _off, road in HIGHWAY_LAYERS}
+    r = F.coalesce(_by_highway(highway, is_road), F.lit(False))
     if railway is not None:
         r = F.when(railway.isNotNull() & (railway != ""), F.lit(True)).otherwise(r)
     if boundary is not None:

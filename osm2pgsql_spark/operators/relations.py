@@ -198,9 +198,6 @@ def assemble_multipolygon(lines: list[np.ndarray]):
     return ("multipolygon", polys)
 
 
-_UDF_CACHE: dict[str, object] = {}
-
-
 def _decode_lines(parts) -> list[np.ndarray]:
     lines = []
     for w in parts:
@@ -212,7 +209,7 @@ def _decode_lines(parts) -> list[np.ndarray]:
     return lines
 
 
-def _mp_kernel(wkb_list: pd.Series) -> pd.Series:
+def _mp_kernel(wkb_list: list) -> pd.Series:
     out = []
     for parts in wkb_list:
         if parts is None or len(parts) == 0:
@@ -222,7 +219,7 @@ def _mp_kernel(wkb_list: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def _ml_kernel(wkb_list: pd.Series) -> pd.Series:
+def _ml_kernel(wkb_list: list) -> pd.Series:
     """Member lines -> line_merge'd multilinestring WKB, parts sorted
     by WKB bytes for deterministic output (SURVEY §7 risk (d))."""
     out = []
@@ -249,22 +246,6 @@ def _ml_kernel(wkb_list: pd.Series) -> pd.Series:
             + b"".join(part_wkbs)
         )
     return pd.Series(out, dtype=object)
-
-
-def _get_udf(name: str, kernel) -> object:
-    from pyspark.sql.functions import pandas_udf
-
-    # Nondeterministic-marked like the rings parts kernel below: these
-    # assembly kernels (line_merge / multipolygon / multipoint /
-    # collection) are the expensive per-relation work, and their output
-    # column is routinely consumed by several downstream measure kernels
-    # or filtered on (flex not_null).  Chained Python UDFs share nothing
-    # between consumer chains, so without the mark each consumer re-runs
-    # the whole assembly (guide §4.4).  The kernels are pure; the mark
-    # only pins single evaluation.
-    if name not in _UDF_CACHE:
-        _UDF_CACHE[name] = pandas_udf(kernel, "binary").asNondeterministic()
-    return _UDF_CACHE[name]
 
 
 def grouped_member_wkbs(
@@ -302,9 +283,11 @@ def relation_multipolygons(
     member ways.  Null geom where assembly fails.  Pass `grouped`
     (from grouped_member_wkbs) to reuse an already-built member
     assembly."""
+    from osm2pgsql_spark.operators.geom_udfs import kernel_udf
+
     if grouped is None:
         grouped = grouped_member_wkbs(relations, ways, nodes)
-    udf = _get_udf("mp", _mp_kernel)
+    udf = kernel_udf("relation_multipolygon_wkb")
     return grouped.select("rel_id", udf(F.col("member_wkbs")).alias("geom"))
 
 
@@ -324,21 +307,17 @@ def _mp_parts(parts, as_multi: bool):
     return rows
 
 
-def _parts_kernel(as_multi: bool):
+def _parts_kernel(wkb_lists: list, as_multi: pd.Series) -> pd.Series:
     """Scalar Arrow kernel: collect_list of member WKBs ->
     array<binary> of split polygon WKBs.  Scalar pandas UDFs batch
     thousands of relations per Arrow transfer; the grouped-map
     (applyInPandas) alternative paid per-group pandas frame overhead
     that dominated at bench scale (15s for ~5k relations vs ~1s
     here)."""
-
-    def wkbs(wkb_list: pd.Series) -> pd.Series:
-        out = []
-        for parts in wkb_list:
-            out.append(_mp_parts(parts, as_multi))
-        return pd.Series(out, dtype=object)
-
-    return wkbs
+    return pd.Series(
+        [_mp_parts(parts, bool(m)) for parts, m in zip(wkb_lists, as_multi)],
+        dtype=object,
+    )
 
 
 def relation_polygon_parts(
@@ -357,31 +336,19 @@ def relation_polygon_parts(
     assemble to nothing (broken rings, deleted members) drop out —
     the reference's tolerance for broken multipolygon data (osmium
     area-assembler failure skips the object).  One ring-assembly
-    kernel pass; per-part area comes from the shared wkb_area kernel
-    on the exploded (small) part rows."""
-    from pyspark.sql.functions import pandas_udf
-
-    from osm2pgsql_spark.operators.geom_udfs import wkb_area
-
-    key = f"mp_parts_{bool(enable_multi)}"
-    if key not in _UDF_CACHE:
-        # asNondeterministic: the kernel runs a full ring assembly per
-        # relation, and both the pushed-down `parts IS NOT NULL` filter
-        # and InferFiltersFromGenerate's size(parts)>0 guard otherwise
-        # re-evaluate it below its own output filter — two assembly
-        # passes per relation for one result (spark_optimization_guide
-        # §4.4; plans/r14/relation_multipolygon_rings_before.txt nodes
-        # 9+12).  The kernel is pure; the flag only pins one evaluation.
-        _UDF_CACHE[key] = pandas_udf(
-            _parts_kernel(bool(enable_multi)), "array<binary>"
-        ).asNondeterministic()
-    wkb_udf = _UDF_CACHE[key]
+    kernel pass (pinned, so neither the `parts IS NOT NULL` filter nor
+    the explode's size guard re-runs it); per-part area comes from the
+    shared wkb_area kernel on the exploded (small) part rows."""
+    from osm2pgsql_spark.operators.geom_udfs import kernel_udf, wkb_area
 
     if grouped is None:
         grouped = grouped_member_wkbs(relations, ways, nodes)
-    packed = grouped.select(
-        "rel_id", wkb_udf(F.col("member_wkbs")).alias("parts")
-    ).where(F.col("parts").isNotNull())
+    parts = kernel_udf("relation_polygon_part_wkbs")(
+        F.col("member_wkbs"), F.lit(bool(enable_multi))
+    )
+    packed = grouped.select("rel_id", parts.alias("parts")).where(
+        F.col("parts").isNotNull()
+    )
     return packed.select(
         "rel_id", F.posexplode("parts").alias("part_pos", "wkb")
     ).select(
@@ -408,6 +375,8 @@ def relation_multilinestrings(
     partitioning (right when the output feeds more shuffles, or at
     scales where byte-sizing already yields wide plans).
     way_points: as in member_way_points."""
+    from osm2pgsql_spark.operators.geom_udfs import kernel_udf
+
     mw = member_way_points(relations, ways, nodes, way_points)
     if kernel_partitions:
         mw = mw.repartition(kernel_partitions, "rel_id")
@@ -420,13 +389,13 @@ def relation_multilinestrings(
             lambda s: s["line_wkb"],
         ).alias("member_wkbs")
     )
-    udf = _get_udf("ml", _ml_kernel)
+    udf = kernel_udf("relation_multilinestring_wkb")
     return grouped.select("rel_id", udf(F.col("member_wkbs")).alias("geom"))
 
 
 # ------------------------------------- multipoint / geometrycollection
 
-def _mpoint_kernel(pts_list: pd.Series) -> pd.Series:
+def _mpoint_kernel(pts_list: list) -> pd.Series:
     """[(member_pos, lon, lat)] sorted -> point/multipoint WKB
     (reference create_multipoint, src/geom-from-osm.cpp:136-170)."""
     out = []
@@ -442,7 +411,7 @@ def _mpoint_kernel(pts_list: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def _coll_kernel(wkbs: pd.Series) -> pd.Series:
+def _coll_kernel(wkbs: list) -> pd.Series:
     """[(member_pos, wkb)] sorted -> geometrycollection WKB (reference
     create_collection, src/geom-from-osm.cpp:253-279)."""
     out = []
@@ -462,6 +431,8 @@ def relation_multipoints(relations: DataFrame, nodes: DataFrame) -> DataFrame:
     """(rel_id, geom WKB) — point/multipoint from the relation's node
     members in member order (reference as_multipoint,
     src/geom-from-osm.cpp:136-170 via src/output-flex.cpp:453-606)."""
+    from osm2pgsql_spark.operators.geom_udfs import kernel_udf
+
     m = (
         relations.select(
             F.col("id").alias("rel_id"), F.posexplode("members").alias("member_pos", "m")
@@ -474,7 +445,7 @@ def relation_multipoints(relations: DataFrame, nodes: DataFrame) -> DataFrame:
     grouped = j.groupBy("rel_id").agg(
         F.array_sort(F.collect_list(F.struct("member_pos", "lon", "lat"))).alias("pts")
     )
-    udf = _get_udf("mpoint", _mpoint_kernel)
+    udf = kernel_udf("relation_multipoint_wkb")
     return grouped.select("rel_id", udf(F.col("pts")).alias("geom"))
 
 
@@ -484,7 +455,7 @@ def relation_collections(
     """(rel_id, geom WKB geometrycollection) — node members as points,
     way members as linestrings, in member order (reference
     as_geometrycollection, src/geom-from-osm.cpp:253-279)."""
-    from osm2pgsql_spark.operators.geom_udfs import point_wkb
+    from osm2pgsql_spark.operators.geom_udfs import kernel_udf, point_wkb
 
     nm = (
         relations.select(
@@ -508,5 +479,5 @@ def relation_collections(
     grouped = members.groupBy("rel_id").agg(
         F.array_sort(F.collect_list(F.struct("member_pos", "wkb"))).alias("parts")
     )
-    udf = _get_udf("coll", _coll_kernel)
+    udf = kernel_udf("relation_collection_wkb")
     return grouped.select("rel_id", udf(F.col("parts")).alias("geom"))

@@ -983,20 +983,17 @@ class FlexConfig:
                 # generic 'geometry' column: the rule's way_geometry
                 # hint is the Lua as_polygon()/as_linestring() choice
                 eff = rule.way_geometry or "linestring"
-            # single_eval: flex applies not_null filters on the geometry
-            # column itself, and callers chain further kernels over it —
-            # without the nondeterministic pin the assembly kernel is
-            # evaluated once under the filter and once inlined into the
-            # downstream kernel (guide §4.4; flex_generic_lines plan had
-            # _linestring_kernel twice).
+            # flex applies not_null filters on the geometry column itself
+            # and chains further kernels over it; the kernel table pins
+            # these kernels, so each runs once (operators/geom_udfs.py).
             if eff == "linestring":
                 if cd.srid == 3857:
                     return pts_linestring_wkb_3857(F.col("pts"))
-                return assembly.pts_to_linestring_wkb(F.col("pts"), single_eval=True)
+                return assembly.pts_to_linestring_wkb(F.col("pts"))
             if eff == "polygon":
                 if cd.srid == 3857:
                     return pts_polygon_wkb_3857(F.col("pts"))
-                return assembly.pts_to_polygon_wkb(F.col("pts"), single_eval=True)
+                return assembly.pts_to_polygon_wkb(F.col("pts"))
         if rule.kind == "relation":
             want = rule.relation_geometry
             ok = (

@@ -1184,8 +1184,6 @@ def _compile_declarative(text: str, model: LuaConfigModel):
                 raise LuaConfigError(f"unsupported geometry method {name!r}")
         return g, has_transform
 
-    _SCALAR_UDFS = {}
-
     def scalar_udf(name: str):
         from osm2pgsql_spark.operators import geom_udfs
 

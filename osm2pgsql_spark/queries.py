@@ -1875,7 +1875,7 @@ def q_expire_line_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (0.5 - yt_ / map_w) * EARTH_CIRCUMFERENCE
 
     lines = p.select(
-        geom_udfs.pts_linestring_wkb(
+        assembly.pts_to_linestring_wkb(
             F.array(
                 _xy(merc_x(xa), merc_y(yt)), _xy(merc_x(xb), merc_y(yt))
             )
@@ -3665,11 +3665,9 @@ def q_geom_centroid_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
         _xy(cx - s, cy - s), _xy(cx + s, cy - s), _xy(cx + s, cy + s),
         _xy(cx - s, cy + s), _xy(cx - s, cy - s),
     )
-    # single_eval: geom feeds centroid + bbox + n_points — without the
-    # pin each consumer chain re-runs the linestring build (§4.4)
-    g = base.select(
-        "id", geom_udfs.pts_linestring_wkb(ring, single_eval=True).alias("geom")
-    )
+    # geom feeds centroid + bbox + n_points: the pinned line kernel
+    # runs once for all three (§4.4)
+    g = base.select("id", assembly.pts_to_linestring_wkb(ring).alias("geom"))
     c = geom_udfs.wkb_centroid_xy(F.col("geom"))
     b = geom_udfs.wkb_bbox(F.col("geom"))
     return g.select(
@@ -3712,12 +3710,9 @@ def q_geom_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = F.array(
         _xy(cx - s, cy), _xy(cx, cy + F.col("bend")), _xy(cx + s, cy)
     )
-    # single_eval: geom feeds n_points + length (§4.4 multi-consumer)
     g = base.select(
         "id",
-        geom_udfs.wkb_simplify(
-            geom_udfs.pts_linestring_wkb(pts), 0.1, single_eval=True
-        ).alias("geom"),
+        geom_udfs.wkb_simplify(assembly.pts_to_linestring_wkb(pts), 0.1).alias("geom"),
     )
     return g.select(
         "id",
@@ -3741,12 +3736,9 @@ def q_geom_segmentize(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _square_base(spark, sf_dir)
     cx, cy, s = F.col("cx"), F.col("cy"), F.col("s")
     pts = F.array(_xy(cx - s, cy - s), _xy(cx + s, cy - s))
-    # single_eval: geom feeds n_parts + n_points + length (§4.4)
     g = base.select(
         "id",
-        geom_udfs.wkb_segmentize(
-            geom_udfs.pts_linestring_wkb(pts), 0.375, single_eval=True
-        ).alias("geom"),
+        geom_udfs.wkb_segmentize(assembly.pts_to_linestring_wkb(pts), 0.375).alias("geom"),
     )
     return g.select(
         "id",
@@ -3769,17 +3761,18 @@ def q_geom_transform_3857(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2pgsql_spark.operators import geom_udfs
 
     n = osm_synth.nodes(spark, sf_dir)
+    # one projection chains point -> 3857 -> bbox in one Python eval;
+    # the bbox is staged because its pinned input would run per use
     g = n.select(
         "node_id",
-        geom_udfs.wkb_transform_3857(
+        geom_udfs.wkb_bbox(geom_udfs.wkb_transform_3857(
             geom_udfs.point_wkb(F.col("lon"), F.col("lat"))
-        ).alias("geom"),
+        )).alias("b"),
     )
-    b = geom_udfs.wkb_bbox(F.col("geom"))
     return g.select(
         "node_id",
-        roundn(b["min_x"], 0).alias("x"),
-        roundn(b["min_y"], 0).alias("y"),
+        roundn(F.col("b.min_x"), 0).alias("x"),
+        roundn(F.col("b.min_y"), 0).alias("y"),
     )
 
 
@@ -4094,7 +4087,7 @@ def q_geom_distance_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cx, cy, s = F.col("cx"), F.col("cy"), F.col("s")
     pa = geom_udfs.point_wkb(cx - s, cy - s)
     pb = geom_udfs.point_wkb(cx + s, cy + s)
-    diag = geom_udfs.pts_linestring_wkb(
+    diag = assembly.pts_to_linestring_wkb(
         F.array(_xy(cx - s, cy - s), _xy(cx + s, cy + s))
     )
     g = base.select(
@@ -4150,21 +4143,18 @@ def q_river_width_from_areas(spark: SparkSession, sf_dir: str) -> DataFrame:
             _xy(mx - h, my + h), _xy(mx - h, my - h),
         )
 
-    # single_eval: width_from_areas consumes geom twice (grid bbox +
-    # exact clip kernel) — without the pin the line build runs per
-    # consumer chain (§4.4)
     lines = base.select(
         F.col("id").alias("edge_id"),
-        geom_udfs.pts_linestring_wkb(
-            F.array(_xy(cx - 2 * s, cy), _xy(cx + 3 * s, cy)), single_eval=True
+        assembly.pts_to_linestring_wkb(
+            F.array(_xy(cx - 2 * s, cy), _xy(cx + 3 * s, cy))
         ).alias("geom"),
     )
     areas = base.select(
-        geom_udfs.pts_polygon_wkb(ring(cx, cy, s)).alias("area_geom"),
+        assembly.pts_to_polygon_wkb(ring(cx, cy, s)).alias("area_geom"),
         F.col("w").alias("width"),
     ).unionByName(
         base.select(
-            geom_udfs.pts_polygon_wkb(ring(cx + 2 * s, cy, s / 2)).alias("area_geom"),
+            assembly.pts_to_polygon_wkb(ring(cx + 2 * s, cy, s / 2)).alias("area_geom"),
             (F.col("w") / 2).alias("width"),
         )
     )
@@ -4191,13 +4181,8 @@ def q_spherical_polygon_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         _xy(cx - s, cy - s), _xy(cx + s, cy - s), _xy(cx + s, cy + s),
         _xy(cx - s, cy + s), _xy(cx - s, cy - s),
     )
-    g = base.select("id", geom_udfs.pts_polygon_wkb(ring).alias("geom"))
-    return g.select(
-        "id",
-        roundn(geom_udfs.wkb_spherical_area_sphere(F.col("geom")), -3).alias(
-            "sph_area"
-        ),
-    )
+    area = geom_udfs.wkb_spherical_area_sphere(assembly.pts_to_polygon_wkb(ring))
+    return base.select("id", roundn(area, -3).alias("sph_area"))
 
 
 def _spherical_polygon_area_oracle() -> str:
@@ -4267,7 +4252,7 @@ def q_vector_tile_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     cx, cy, r = F.col("cx"), F.col("cy"), F.col("r")
     polys = base.select(
         "id",
-        geom_udfs.pts_polygon_wkb(
+        assembly.pts_to_polygon_wkb(
             F.array(
                 _xy(cx - r, cy - r), _xy(cx + r, cy - r), _xy(cx + r, cy + r),
                 _xy(cx - r, cy + r), _xy(cx - r, cy - r),
@@ -4276,7 +4261,7 @@ def q_vector_tile_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lines = base.select(
         "id",
-        geom_udfs.pts_linestring_wkb(
+        assembly.pts_to_linestring_wkb(
             F.array(_xy(cx - r, cy), _xy(cx + r, cy))
         ).alias("geom"),
     )
@@ -4336,7 +4321,7 @@ def q_vector_tile_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     upolys = (
         base.select(F.col("id").cast("string").alias("gid"), F.explode(rects).alias("pts"))
-        .select("gid", geom_udfs.pts_polygon_wkb(F.col("pts")).alias("geom"))
+        .select("gid", assembly.pts_to_polygon_wkb(F.col("pts")).alias("geom"))
     )
     uc = (
         tile_vector_union(upolys, zoom=_VT_ZOOM, buffer_size=0.0, group_by="gid")
@@ -4412,15 +4397,13 @@ def q_geom_reverse_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _square_base(spark, sf_dir)
     cx, cy, s = F.col("cx"), F.col("cy"), F.col("s")
-    diag = geom_udfs.pts_linestring_wkb(
+    diag = assembly.pts_to_linestring_wkb(
         F.array(_xy(cx - s, cy - s), _xy(cx + s, cy + s))
     )
-    # single_eval + MATERIALIZED column: rev feeds geometry_type +
-    # interpolate.  The pin alone is not enough — nondeterministic
-    # expressions cannot be deduplicated, so using the `rev` expression
-    # twice in one projection would evaluate it twice; staged as a
-    # named column, consumers share the single eval's attribute (§4.4).
-    rev = geom_udfs.wkb_reverse(diag, single_eval=True)
+    # staged column: rev feeds geometry_type + interpolate.  The pinned
+    # reverse kernel, used twice in one projection, would run twice;
+    # staged as a named column, consumers share one evaluation (§4.4).
+    rev = geom_udfs.wkb_reverse(diag)
     staged = base.select("id", rev.alias("rev"))
     ip = geom_udfs.wkb_interpolate_xy(F.col("rev"), 0.25)
     scalar = staged.select(
@@ -4448,11 +4431,10 @@ def q_geom_reverse_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes (n_parts, max part_points) straight off the merged
     # geometry's header scan — one kernel, no explode, no shuffle;
     # n_parts IS NULL reproduces the explode's empty-array row drop.
-    # single_eval + staged column: the filter must not push below the
-    # kernel (§4.4), and an ND expression referenced twice in one
-    # projection would run twice — consumers share the staged
-    # attribute (the `rev` pattern above).
-    st = geom_udfs.wkb_multi_part_stats(F.col("geom"), single_eval=True)
+    # staged column: the pinned kernel keeps the filter above it, and
+    # referenced twice in one projection it would run twice — consumers
+    # share the staged attribute (the `rev` pattern above).
+    st = geom_udfs.wkb_multi_part_stats(F.col("geom"))
     parts = (
         ml.select(F.col("rel_id").alias("id"), st.alias("st"))
         .where(F.col("st.n_parts").isNotNull())
@@ -4724,8 +4706,8 @@ def q_polylabel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = base.select(
         "id",
-        geom_udfs.pts_polygon_wkb(ring(s, s)).alias("sq"),
-        geom_udfs.pts_polygon_wkb(ring(2 * s, s)).alias("rect"),
+        assembly.pts_to_polygon_wkb(ring(s, s)).alias("sq"),
+        assembly.pts_to_polygon_wkb(ring(2 * s, s)).alias("rect"),
     )
     ps = geom_udfs.wkb_polylabel_xy(F.col("sq"), stretch=1.0)
     pr = geom_udfs.wkb_polylabel_xy(F.col("rect"), stretch=2.0)

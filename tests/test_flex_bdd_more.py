@@ -347,7 +347,7 @@ def test_locator_polygon_region_from_db(spark):
     grid) classifies post boxes by exact point-in-polygon — n10 at
     (15, 8) inside the triangle, n11 at (15, 2) outside (below the
     diagonal)."""
-    from osm2pgsql_spark.operators import geom_udfs
+    from osm2pgsql_spark.operators import assembly
     from osm2pgsql_spark.operators.locator import polygon_all_intersecting
 
     # triangle (10,0) (20,10) (10,10) — the feature's P1 region
@@ -355,7 +355,7 @@ def test_locator_polygon_region_from_db(spark):
         [(1, [[10.0, 0.0], [20.0, 10.0], [10.0, 10.0], [10.0, 0.0]])],
         "id long, ring array<array<double>>",
     ).select(
-        geom_udfs.pts_polygon_wkb(
+        assembly.pts_to_polygon_wkb(
             F.transform(
                 "ring",
                 lambda p: F.struct(

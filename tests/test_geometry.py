@@ -393,7 +393,10 @@ def test_pts_3857_kernels_match_scalar_path():
     """The merc-fused line/polygon kernels must equal
     make_* -> transform_4326_to_3857 -> to_wkb byte-exactly."""
     import pandas as pd
-    from osm2pgsql_spark.operators.geom_udfs import _pts_line_3857, _pts_poly_3857
+    from osm2pgsql_spark.operators.geom_udfs import KERNELS
+
+    _pts_line_3857 = KERNELS["pts_linestring_wkb_3857"].fn
+    _pts_poly_3857 = KERNELS["pts_polygon_wkb_3857"].fn
 
     sq = [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)]
     bow = [(0.0, 0.0), (2.0, 2.0), (2.0, 0.0), (0.0, 2.0), (0.0, 0.0)]

@@ -327,8 +327,13 @@ def test_generic_import_shares_one_materialized_way_relation(tmp_path, spark):
     lists, and polygons' multipolygon assembly reads the same points:
     that relation is materialized once and both plans scan it.  routes
     and boundaries share the materialized multilinestring geometry.
-    A rule set with one reader keeps a lazy plan (flex_generic_lines)."""
+    A rule set with one reader keeps a lazy plan (flex_generic_lines).
+    Each geometry kernel is evaluated in exactly one Python eval node
+    per table: none is re-run under a pushed-down not_null filter."""
+    import re
+
     from examples.generic_import import generic_import
+    from osm2pgsql_spark.operators.geom_udfs import KERNELS
     from osm2pgsql_spark.queries import q_flex_generic_lines
     from osm2pgsql_spark.sources.opl import read_opl
 
@@ -349,6 +354,18 @@ def test_generic_import_shares_one_materialized_way_relation(tmp_path, spark):
     assert ck["boundaries"] == ck["routes"]
     assert ck["routes"] != ck["lines"]
     assert _checkpoints(q_flex_generic_lines(spark, SF_DIR)) == set()
+
+    n_evals = 0
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        evals = [line for line in plan.splitlines() if "EvalPython" in line]
+        n_evals += len(evals)
+        for kernel in KERNELS:
+            hits = sum(1 for line in evals if re.search(rf"\b{kernel}\(", line))
+            assert hits <= 1, f"{name}: {kernel} evaluated {hits}x:\n{plan}"
+    # points 1, lines 1, polygons 4 (way polygons, member lines,
+    # multipolygons, their 3857 transform), routes 1, boundaries 1
+    assert n_evals == 8
 
 
 # --- append-only ids=nil log tables (track-changes.lua) -------------

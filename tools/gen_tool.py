@@ -259,11 +259,11 @@ def main() -> None:
         if "name" not in feats.columns:
             feats = feats.withColumn("name", F.lit(None).cast("string"))
         if args.areas:
-            from osm2pgsql_spark.operators.geom_udfs import pts_linestring_wkb
+            from osm2pgsql_spark.operators.assembly import pts_to_linestring_wkb
             areas = spark.read.parquet(args.areas)
             lines = feats.select(
                 "edge_id",
-                pts_linestring_wkb(F.array(
+                pts_to_linestring_wkb(F.array(
                     F.struct(F.col("x1").alias("x"), F.col("y1").alias("y")),
                     F.struct(F.col("x2").alias("x"), F.col("y2").alias("y")),
                 )).alias("geom"),
