@@ -201,20 +201,29 @@ def planet_osm_tables(
     z, roads = z_order_roads(tags)
     is_poly = _is_polygon(tags, F.col("refs"))
 
-    line_base = w.where(~is_poly)
-    line = line_base.select(
-        F.col("id").alias("osm_id"),
-        *_style_cols(tags),
-        z,
-        assembly.pts_to_linestring_wkb(F.col("pts")).alias("way"),
-    ).where(F.col("way").isNotNull())
+    def with_way(df: DataFrame, way) -> DataFrame:
+        # the not-null filter sits on the pinned kernel's own
+        # projection: no filter pushes below a pinned kernel, and above
+        # the wide style projection Catalyst's constraint inference
+        # over its aliases takes seconds to minutes per plan
+        return df.withColumn("way", way).where(F.col("way").isNotNull())
 
-    roads_df = line_base.where(roads).select(
+    line_base = w.where(~is_poly)
+    line = with_way(line_base, assembly.pts_to_linestring_wkb(F.col("pts"))).select(
         F.col("id").alias("osm_id"),
         *_style_cols(tags),
         z,
-        assembly.pts_to_linestring_wkb(F.col("pts")).alias("way"),
-    ).where(F.col("way").isNotNull())
+        F.col("way"),
+    )
+
+    roads_df = with_way(
+        line_base.where(roads), assembly.pts_to_linestring_wkb(F.col("pts"))
+    ).select(
+        F.col("id").alias("osm_id"),
+        *_style_cols(tags),
+        z,
+        F.col("way"),
+    )
 
     # --reproject-area: way_area in mercator m^2 while the geometry
     # column stays 4326 (output-pgsql.cpp:45-55); a no-op at srid 3857
@@ -223,16 +232,14 @@ def planet_osm_tables(
         area_expr = mercator_shoelace_area(F.col("pts"))
     else:
         area_expr = assembly.shoelace_area(F.col("pts"))
-    polygon = (
-        w.where(is_poly)
-        .select(
-            F.col("id").alias("osm_id"),
-            *_style_cols(tags),
-            z,
-            area_expr.alias("way_area"),
-            assembly.pts_to_polygon_wkb(F.col("pts")).alias("way"),
-        )
-        .where(F.col("way").isNotNull())
+    polygon = with_way(
+        w.where(is_poly), assembly.pts_to_polygon_wkb(F.col("pts"))
+    ).select(
+        F.col("id").alias("osm_id"),
+        *_style_cols(tags),
+        z,
+        area_expr.alias("way_area"),
+        F.col("way"),
     )
 
     if relations is not None:

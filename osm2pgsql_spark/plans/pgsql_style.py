@@ -673,7 +673,10 @@ def planet_tables(
             )
 
         # the geometry kernels are pinned, so no filter pushes below
-        # them: the roads rows are selected before their lines are built
+        # them: the roads rows are selected before their lines are
+        # built, and the not-null filter sits on the kernel's own
+        # projection (above the wide data-column projection, Catalyst's
+        # constraint inference over its aliases takes seconds to minutes)
         return rows(df), rows(df.where(F.col("roads")))
 
     point = project_nodes(routed_nodes, srid).select(
@@ -700,9 +703,14 @@ def planet_tables(
     is_poly = F.col("polygon") & closed
     area = (mercator_shoelace_area(pts) if reproject_area
             else assembly.shoelace_area(pts))
-    polygon = polygon_rows(
-        w.where(is_poly), F.col("id"), assembly.pts_to_polygon_wkb(pts), area
-    ).where(F.col("way").isNotNull())
+    # the not-null filter sits on the pinned kernel's own projection,
+    # below the wide data-column projection (see line_rows)
+    ways_poly = (
+        w.where(is_poly)
+        .withColumn("__way", assembly.pts_to_polygon_wkb(pts))
+        .where(F.col("__way").isNotNull())
+    )
+    polygon = polygon_rows(ways_poly, F.col("id"), F.col("__way"), area)
     line, roads = line_rows(
         w.where(~is_poly), F.col("id"), assembly.pts_to_linestring_wkb(pts)
     )
