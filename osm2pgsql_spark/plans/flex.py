@@ -65,6 +65,63 @@ GEOM_TYPES = {
 
 ID_TYPES = {"id_type", "id_num"}
 
+# The id scheme (reference flex_table_t, flex-table.cpp:76-130): which
+# object kinds a scheme's table accepts (matches_type) and the key
+# columns it writes for them (map_id).  Every insert path and the
+# append refresh ask ACCEPTS and key_columns; no other module knows the
+# scheme.  Way tables also take relations, area tables ways and
+# relations; tile tables take x/y from the row, not from the object.
+KINDS = ("node", "way", "relation")
+ACCEPTS = {
+    "node": ("node",),
+    "way": ("way", "relation"),
+    "relation": ("relation",),
+    "area": ("way", "relation"),
+    "any_object": KINDS,
+    "any_single": KINDS,
+    "tile": KINDS,
+    "none": KINDS,
+}
+
+
+def rejected_kind(table: str, ids: str, kind: str) -> str | None:
+    """The error for inserting a <kind> object into an <ids> table, or
+    None when the scheme takes that kind (output-flex.cpp wording)."""
+    if kind in ACCEPTS[ids]:
+        return None
+    return f"Trying to add {kind} to table '{table}' (id type '{ids}')."
+
+
+def key_columns(ids: str, kind: str | Column, osm_id: Column,
+                value=None) -> list[Column]:
+    """The key columns an <ids> table stores for an object (map_id,
+    flex-table.cpp:107-130): node/way/relation/area tables one osm_id
+    (relations -id outside relation tables), any_object tables the
+    kind letter in osm_type plus the raw id, any_single tables node id /
+    way -id / relation -id - 10^17, tile tables x/y, none tables none.
+
+    kind: a kind name (one declarative rule) or a column of kind letters
+    'n'/'w'/'r' (callback rows, whose kinds the scheme accepts).
+    value(name): a row value column (tile tables read x and y)."""
+    if ids == "none":
+        return []
+    if ids == "tile":
+        return [value(axis).cast("int").alias(axis) for axis in ("x", "y")]
+    letter = F.lit(kind[0]) if isinstance(kind, str) else kind
+    if ids == "any_object":
+        return [letter.alias("osm_type"), osm_id.alias("osm_id")]
+    by_kind = {"n": osm_id, "w": osm_id, "r": osm_id if ids == "relation" else -osm_id}
+    if ids == "any_single":
+        by_kind["w"] = -osm_id
+        by_kind["r"] = -osm_id - F.lit(100000000000000000)
+    if isinstance(kind, str):
+        return [by_kind[kind[0]].alias("osm_id")]
+    codes = [k[0] for k in ACCEPTS[ids]]
+    mapped = by_kind[codes[-1]]
+    for code in reversed(codes[:-1]):
+        mapped = F.when(kind == code, by_kind[code]).otherwise(mapped)
+    return [mapped.alias("osm_id")]
+
 
 @dataclass
 class ColumnDef:
@@ -89,14 +146,14 @@ class TableDef:
     """A declared output table (flex_table_t, flex-table.hpp:54-281)."""
 
     name: str
-    ids: str  # node | way | relation | area | any_object | tile
+    ids: str  # a key of ACCEPTS: node | way | relation | area | any_object
+    #          | any_single | tile | none
     columns: list[ColumnDef]
     schema: str = "public"
     cluster_by_geom: bool = True
 
     def __post_init__(self) -> None:
-        if self.ids not in {"node", "way", "relation", "area", "any_object",
-                            "any_single", "tile", "none"}:
+        if self.ids not in ACCEPTS:
             raise ValueError(f"unknown id scheme {self.ids!r}")
 
     def geom_columns(self) -> list[ColumnDef]:
@@ -145,11 +202,25 @@ class ExpireOutputDef:
     max_tiles_overall: int = 0
 
 
-def _callback_mapper(kind: str, fn, valid_tables: frozenset):
+# The frame every callback path (Python process() callbacks, procedural
+# Lua) hands to FlexConfig._callback_rows_for_table.  A row's first
+# geometry column travels in geom/geom_srid; later geometry columns
+# travel hex-encoded in vals under GEOM_HEX + column and
+# GEOM_SRID + column.
+CALLBACK_SCHEMA = (
+    "tbl string, osm_kind string, osm_id long, "
+    "vals map<string,string>, geom binary, geom_srid int"
+)
+GEOM_HEX = "__geomhex__:"
+GEOM_SRID = "__geomsrid__:"
+
+
+def _callback_mapper(kind: str, fn, tables: dict[str, tuple[str, frozenset]]):
     """Arrow-batch executor for one process() callback: builds the
     per-object dict (tags, refs/members, pre-assembled WKB geometry),
     invokes the user function, and flattens its (table, row) results
-    into the unified callback frame."""
+    into the callback frame.  tables: name -> (id scheme, names of the
+    table's geometry columns after the first)."""
 
     def mapper(batches):
         import pandas as pd
@@ -209,17 +280,24 @@ def _callback_mapper(kind: str, fn, valid_tables: frozenset):
                         else [(m["type"], int(m["ref"]), m["role"]) for m in members]
                     )
                 for tbl, row in fn(obj) or ():
-                    if tbl not in valid_tables:
+                    if tbl not in tables:
                         # reference flex raises on insert into an
                         # unknown table; silent drop would lose data
                         raise ValueError(
                             f"callback inserted into undefined table {tbl!r} "
-                            f"(defined: {sorted(valid_tables)})"
+                            f"(defined: {sorted(tables)})"
                         )
+                    ids, later_geoms = tables[tbl]
+                    err = rejected_kind(tbl, ids, kind)
+                    if err is not None:
+                        raise ValueError(err)
                     vals: dict[str, str] = {}
                     geom = None
                     for k, v in row.items():
-                        if isinstance(v, (bytes, bytearray)):
+                        if isinstance(v, (bytes, bytearray)) and k in later_geoms:
+                            vals[GEOM_HEX + k] = bytes(v).hex()
+                            vals[GEOM_SRID + k] = "4326"
+                        elif isinstance(v, (bytes, bytearray)):
                             geom = bytes(v)
                         elif isinstance(v, bool):
                             vals[k] = "true" if v else "false"
@@ -229,12 +307,34 @@ def _callback_mapper(kind: str, fn, valid_tables: frozenset):
                             vals[k] = json.dumps(v, sort_keys=True)
                         elif v is not None:
                             vals[k] = str(v)
-                    rows.append((tbl, kind[0], obj["id"], vals, geom))
+                    rows.append((tbl, kind[0], obj["id"], vals, geom, 4326))
             yield pd.DataFrame(
-                rows, columns=["tbl", "osm_kind", "osm_id", "vals", "geom"]
+                rows,
+                columns=["tbl", "osm_kind", "osm_id", "vals", "geom", "geom_srid"],
             )
 
     return mapper
+
+
+def _reproject(geom: Column, srid: Column, target: int) -> Column:
+    """A callback geometry of the given srid in a column declared with
+    srid <target>.  Callbacks may hand over already-transformed
+    geometry (Lua's object:as_X():transform(srid)), so only rows still
+    in 4326 are reprojected (reference: per-row srid check on insert,
+    flex-write.cpp:433-462); a geometry projected away from 4326 cannot
+    be written to a 4326 column (the reference raises; it becomes NULL
+    here and not_null filters it)."""
+    from osm2pgsql_spark.operators.geom_udfs import (
+        wkb_transform_3857,
+        wkb_transform_epsg,
+    )
+
+    if target == 3857:
+        return F.when(srid == 4326, wkb_transform_3857(geom)).otherwise(geom)
+    if target == 4326:
+        return F.when(srid == 4326, geom)
+    return F.when(srid == target, geom).otherwise(
+        F.when(srid == 4326, wkb_transform_epsg(geom, target)))
 
 
 class FlexConfig:
@@ -265,8 +365,9 @@ class FlexConfig:
         rows, several tables, or nothing (the reference's
         table:insert{} from inside a callback, output-flex.cpp:766-843).
         Scalar row values go through the declared column casts; a
-        bytes value is taken as the row's geometry (4326 WKB;
-        columns declared srid=3857 are reprojected).
+        bytes value is 4326 WKB for the geometry column it is keyed by
+        (any key, in a table with one geometry column), reprojected to
+        the column's declared srid.
 
         Executed via mapInPandas over Arrow batches — embarrassingly
         parallel, where the reference serializes all user code under
@@ -480,6 +581,15 @@ class FlexConfig:
         table:insert{...}."""
         if table not in self.tables:
             raise ValueError(f"unknown table {table!r}")
+        ids = self.tables[table].ids
+        if kind not in KINDS:
+            raise ValueError(f"unknown kind {kind!r}")
+        err = rejected_kind(table, ids, kind)
+        if err is not None:
+            raise ValueError(err)
+        if ids == "tile" and not {"x", "y"} <= values.keys():
+            raise ValueError(
+                f"table {table!r} uses tile ids; rule must provide x and y values")
         if relation_geometry not in (
             "multipolygon", "multilinestring", "multipoint", "geometrycollection"
         ):
@@ -727,33 +837,9 @@ class FlexConfig:
                             "__rel_geom",
                             F.explode(wkb_split_parts(F.col("__rel_geom"))),
                         )
-                cols: list[Column] = []
-                # id scheme (flex-table.hpp:40-49, map_id :166)
-                if tdef.ids in ("node", "way", "relation"):
-                    cols.append(F.col("id").alias("osm_id"))
-                elif tdef.ids == "area":
-                    # ways +id, relations -id
-                    sign = 1 if rule.kind == "way" else -1
-                    cols.append((F.col("id") * sign).alias("osm_id"))
-                elif tdef.ids == "any_object":
-                    cols.append(F.lit(rule.kind[0]).alias("osm_type"))
-                    cols.append(F.col("id").alias("osm_id"))
-                elif tdef.ids == "tile":
-                    # tile-keyed table (gen output; flex-table.hpp:40-49):
-                    # the rule provides x/y expressions
-                    for axis in ("x", "y"):
-                        if axis not in rule.values:
-                            raise ValueError(
-                                f"table {table_name!r} uses tile ids; rule must "
-                                f"provide an {axis!r} value"
-                            )
-                        cols.append(rule.values[axis].cast("int").alias(axis))
+                cols = key_columns(tdef.ids, rule.kind, F.col("id"), rule.values.get)
                 not_null_names: list[str] = []
-                for cd in tdef.columns:
-                    if cd.type in ID_TYPES:
-                        continue
-                    if cd.name in ("x", "y") and tdef.ids == "tile":
-                        continue  # emitted by the id scheme above
+                for cd in self._value_columns(tdef):
                     if cd.type in GEOM_TYPES:
                         if cd.name in rule.values:
                             # explicit geometry value (the reference's
@@ -787,9 +873,7 @@ class FlexConfig:
                     proj = proj.where(F.col(nm).isNotNull())
                 parts.append(proj)
             if cb_df is not None:
-                cbp = self._callback_rows_for_table(cb_df, tdef)
-                if cbp is not None:
-                    parts.append(cbp)
+                parts.append(self._callback_rows_for_table(cb_df, tdef))
             if parts:
                 result = parts[0]
                 for p in parts[1:]:
@@ -809,16 +893,16 @@ class FlexConfig:
 
     def _run_callbacks(self, sources, way_frame) -> DataFrame | None:
         """mapInPandas execution of registered process() callbacks into
-        one unified frame (tbl, osm_kind, osm_id, vals, geom).
+        one callback frame (CALLBACK_SCHEMA).
         way_frame: the ways joined with their point lists, if any."""
         if not self.callbacks:
             return None
         import pandas as pd  # noqa: F401  (needed by the workers)
 
-        out_schema = (
-            "tbl string, osm_kind string, osm_id long, "
-            "vals map<string,string>, geom binary"
-        )
+        tables = {
+            name: (t.ids, frozenset(c.name for c in t.geom_columns()[1:]))
+            for name, t in self.tables.items()
+        }
         frames: list[DataFrame] = []
         for kind, fn in self.callbacks.items():
             src = sources.get(kind)
@@ -836,9 +920,7 @@ class FlexConfig:
             else:
                 prep = src.select("id", "tags", "members", *attrs)
             frames.append(
-                prep.mapInPandas(
-                    _callback_mapper(kind, fn, frozenset(self.tables)), out_schema
-                )
+                prep.mapInPandas(_callback_mapper(kind, fn, tables), CALLBACK_SCHEMA)
             )
         if not frames:
             return None
@@ -856,106 +938,50 @@ class FlexConfig:
 
     def _callback_rows_for_table(
         self, cb_df: DataFrame, tdef: TableDef
-    ) -> DataFrame | None:
-        """Project the unified callback frame into one table's typed
-        schema (same id scheme / casts / not-null policy as the
-        declarative path, so the two union cleanly)."""
-        from osm2pgsql_spark.operators.geom_udfs import wkb_transform_3857
-
-        cbt = cb_df.where(F.col("tbl") == tdef.name)
-        cols: list[Column] = []
-        if tdef.ids == "way":
-            # relations written into way-id tables store -id (the old
-            # C-transform convention, flex-table.cpp:95-130)
-            cols.append(
-                F.when(F.col("osm_kind") == "r", -F.col("osm_id"))
-                .otherwise(F.col("osm_id"))
-                .alias("osm_id")
-            )
-        elif tdef.ids in ("node", "relation"):
-            cols.append(F.col("osm_id"))
-        elif tdef.ids == "any_single":
-            # single-column any-object ids: node id, way -id, relation
-            # -id - 10^17 (flex-table.cpp:107-122)
-            cols.append(
-                F.when(F.col("osm_kind") == "w", -F.col("osm_id"))
-                .when(
-                    F.col("osm_kind") == "r",
-                    -F.col("osm_id") - F.lit(100000000000000000).cast("long"),
-                )
-                .otherwise(F.col("osm_id"))
-                .alias("osm_id")
-            )
-        elif tdef.ids == "area":
-            cols.append(
-                F.when(F.col("osm_kind") == "r", -F.col("osm_id"))
-                .otherwise(F.col("osm_id"))
-                .alias("osm_id")
-            )
-        elif tdef.ids == "any_object":
-            cols.append(F.col("osm_kind").alias("osm_type"))
-            cols.append(F.col("osm_id"))
-        elif tdef.ids == "tile":
-            for axis in ("x", "y"):
-                cols.append(F.col("vals")[axis].cast("int").alias(axis))
+    ) -> DataFrame:
+        """Project the callback frame (CALLBACK_SCHEMA) into one table's
+        typed schema: the same key columns, casts and not-null policy
+        as the declarative path, so the two union cleanly."""
+        vals = F.col("vals")
+        cols = key_columns(tdef.ids, F.col("osm_kind"), F.col("osm_id"),
+                           lambda name: vals[name])
+        first_geom = next(iter(tdef.geom_columns()), None)
         not_null_conds: list[Column] = []
-        for cd in tdef.columns:
-            if cd.type in ID_TYPES:
-                continue
-            if cd.name in ("x", "y") and tdef.ids == "tile":
-                continue
-            if cd.type in GEOM_TYPES:
-                g = F.col("geom")
-                if "geom_srid" in cb_df.columns:
-                    # Lua callbacks may hand over already-transformed
-                    # geometry (object:as_X():transform(srid)); only
-                    # reproject rows still in 4326 (reference: per-row
-                    # srid check on insert, flex-write.cpp:433-462)
-                    if cd.srid == 3857:
-                        g = F.when(
-                            F.col("geom_srid") == 4326, wkb_transform_3857(g)
-                        ).otherwise(g)
-                    elif cd.srid == 4326:
-                        # a geometry already projected away from 4326
-                        # cannot be written to a 4326 column (reference
-                        # raises; we null it and let not_null filter)
-                        g = F.when(F.col("geom_srid") == 4326, g)
-                    else:
-                        from osm2pgsql_spark.operators.geom_udfs import (
-                            wkb_transform_epsg,
-                        )
-
-                        g = F.when(F.col("geom_srid") == cd.srid, g).otherwise(
-                            F.when(
-                                F.col("geom_srid") == 4326,
-                                wkb_transform_epsg(g, cd.srid),
-                            )
-                        )
-                elif cd.srid == 3857:
-                    g = wkb_transform_3857(g)
-                cols.append(g.alias(cd.name))
-                if cd.not_null:
-                    not_null_conds.append(g.isNotNull())
-                continue
-            if cd.type == "hstore":
+        for cd in self._value_columns(tdef):
+            if cd is first_geom:
+                conv = _reproject(F.col("geom"), F.col("geom_srid"), cd.srid)
+            elif cd.type in GEOM_TYPES:
+                conv = _reproject(F.unhex(vals[GEOM_HEX + cd.name]),
+                                  vals[GEOM_SRID + cd.name].cast("int"), cd.srid)
+            elif cd.type == "hstore":
                 # callbacks serialize dict values as JSON strings
-                conv = F.from_json(F.col("vals")[cd.name], "map<string,string>")
+                conv = F.from_json(vals[cd.name], "map<string,string>")
             elif cd.type in ("json", "jsonb"):
                 # already JSON text from the mapper — _convert's to_json
                 # would crash on a string input
-                conv = F.col("vals")[cd.name]
+                conv = vals[cd.name]
             else:
-                conv = self._convert(F.col("vals")[cd.name], cd)
+                conv = self._convert(vals[cd.name], cd)
             cols.append(conv.alias(cd.name))
             if cd.not_null:
                 not_null_conds.append(conv.isNotNull())
-        proj = cbt.select(*cols)
+        proj = cb_df.where(F.col("tbl") == tdef.name).select(*cols)
         if not_null_conds:
             pred = not_null_conds[0]
             for c in not_null_conds[1:]:
                 pred = pred & c
             proj = proj.where(pred)
         return proj
+
+    @staticmethod
+    def _value_columns(tdef: TableDef) -> list[ColumnDef]:
+        """The declared columns a row's values fill: all but the id
+        columns and a tile table's x/y (both written by key_columns)."""
+        return [
+            cd for cd in tdef.columns
+            if cd.type not in ID_TYPES
+            and not (tdef.ids == "tile" and cd.name in ("x", "y"))
+        ]
 
     @staticmethod
     def _geometry_for(rule: Rule, cd: ColumnDef) -> Column:

@@ -55,10 +55,14 @@ from osm2pgsql_spark.lua.interp import (
     LuaTable,
     lua_tostring,
 )
-
-_OUT_SCHEMA = (
-    "tbl string, osm_kind string, osm_id long, "
-    "vals map<string,string>, geom binary, geom_srid int"
+from osm2pgsql_spark.plans.flex import (
+    CALLBACK_SCHEMA,
+    GEOM_HEX,
+    GEOM_SRID,
+    GEOM_TYPES,
+    ColumnDef,
+    FlexConfig,
+    rejected_kind,
 )
 
 _STATE_TBL = "__state__"
@@ -457,7 +461,7 @@ def merge_state(a, b):
 @dataclass
 class LuaTableSpec:
     name: str
-    ids_type: str  # node|way|relation|area|any_object|none
+    ids_type: str  # node|way|relation|area|any_object|any_single|tile|none
     id_column: str
     cache: bool = False
     schema: str = "public"
@@ -476,7 +480,6 @@ def _parse_indexes(options: LuaTable, name: str, columns) -> list:
     flex-lua-index.cpp:23-110): nil -> default gist on the first
     geometry column; explicit array -> validated FlexIndex list with
     the reference's error wording."""
-    from osm2pgsql_spark.plans.flex import GEOM_TYPES
     from osm2pgsql_spark.sinks.live import FlexIndex
 
     col_names = {c.name for c in columns}
@@ -569,8 +572,6 @@ _SQL_TYPE_FALLBACKS = {
 
 
 def _spec_columns(cols_lua) -> list:
-    from osm2pgsql_spark.plans.flex import ColumnDef, GEOM_TYPES
-
     out = []
     n = cols_lua.length()
     for i in range(1, n + 1):
@@ -1091,19 +1092,6 @@ class LuaFlexRuntime:
 
     # -- inserts
 
-    _KIND_OK = {
-        # reference matches_type (flex-table.cpp:76-103): way tables
-        # also take relations (stored as -id); area tables take ways
-        # and relations; node/way/relation tables are otherwise strict
-        "node": {"node"},
-        "way": {"way", "relation"},
-        "relation": {"relation"},
-        "area": {"way", "relation"},
-        "any_object": {"node", "way", "relation"},
-        "any_single": {"node", "way", "relation"},
-        "none": {"node", "way", "relation"},
-    }
-
     _current_kind: str | None = None
 
     def _do_insert(self, spec: LuaTableSpec, row: LuaTable):
@@ -1115,10 +1103,9 @@ class LuaFlexRuntime:
             # ids=nil log tables are the sanctioned use
             raise LuaRuntimeError(
                 f"No context object for column '{spec.id_column}'.")
-        if k is not None and k not in self._KIND_OK[spec.ids_type]:
-            raise LuaRuntimeError(
-                f"Trying to add {k} to table '{spec.name}' (id type "
-                f"'{spec.ids_type}').")
+        err = None if k is None else rejected_kind(spec.name, spec.ids_type, k)
+        if err is not None:
+            raise LuaRuntimeError(err)
         self.inserts.append((spec.name, row))
         if spec.cache and self._current_id is not None:
             self.id_cache.setdefault(spec.name, set()).add(self._current_id)
@@ -1535,7 +1522,7 @@ class LuaFlexRuntime:
         geom = None
         geom_srid = None
         primary_geom_col = next(
-            (c.name for c in spec.columns if _is_geom_type(c.type)), None)
+            (c.name for c in spec.columns if c.type in GEOM_TYPES), None)
         for c in spec.columns:
             v = row.get(c.name)
             if v is None:
@@ -1553,8 +1540,8 @@ class LuaFlexRuntime:
                 elif wkb is not None:
                     # secondary geometry columns travel hex-encoded in
                     # vals (the unified frame has one binary slot)
-                    vals["__geomhex__:" + c.name] = wkb.hex()
-                    vals["__geomsrid__:" + c.name] = str(
+                    vals[GEOM_HEX + c.name] = wkb.hex()
+                    vals[GEOM_SRID + c.name] = str(
                         int(v.hash.get(_SRID_KEY) or 4326))
                 continue
             if isinstance(v, LuaTable):
@@ -1574,12 +1561,6 @@ class LuaFlexRuntime:
             else:
                 vals[c.name] = lua_tostring(v)
         return (tname, kind[0], oid, vals, geom, geom_srid)
-
-
-def _is_geom_type(t: str) -> bool:
-    from osm2pgsql_spark.plans.flex import GEOM_TYPES
-
-    return t in GEOM_TYPES
 
 
 # --------------------------------------------------------- phase mapper
@@ -1732,7 +1713,6 @@ class LuaFlexAdapter:
                 "sequential semantics", stacklevel=2)
 
     def _build_flex(self, probe: LuaFlexRuntime):
-        from osm2pgsql_spark.plans.flex import FlexConfig
 
         fc = FlexConfig()
         for spec in probe.specs.values():
@@ -1886,7 +1866,7 @@ class LuaFlexAdapter:
                           spill_threshold=(self._spill_threshold
                                            if keyed_sink is not None
                                            else None)),
-            _OUT_SCHEMA,
+            CALLBACK_SCHEMA,
         ).localCheckpoint()
         is_state = F.col("tbl") == _STATE_TBL
         deltas = df.where(is_state & (F.col("osm_kind") != "k")) \
@@ -1971,7 +1951,7 @@ class LuaFlexAdapter:
                 [Row(tbl=t, osm_kind=k, osm_id=i, vals=v, geom=g,
                      geom_srid=s)
                  for t, k, i, v, g, s in after_rows],
-                _OUT_SCHEMA))
+                CALLBACK_SCHEMA))
 
         # final merged Lua state (counters summed, flags settled) —
         # inspectable by tests and reusable by append drivers
@@ -1984,13 +1964,7 @@ class LuaFlexAdapter:
             cb = cb.unionByName(f)
         cb = cb.localCheckpoint()
 
-        out: dict[str, DataFrame] = {}
-        for tname, tdef in self._flex.tables.items():
-            df = self._flex._callback_rows_for_table(cb, tdef)
-            if df is not None:
-                df = self._fixup_secondary_geoms(df, cb, tdef)
-                out[tname] = df
-        return out
+        return self._project(cb)
 
     def run_deleted(
         self,
@@ -2016,7 +1990,7 @@ class LuaFlexAdapter:
             out = prep.mapInPandas(
                 _phase_mapper(self.source, kind, None, 1, "append",
                               self.region_db, deleted=True),
-                _OUT_SCHEMA,
+                CALLBACK_SCHEMA,
             )
             frames.append(out.where(~F.col("tbl").isin(_STATE_TBL, _MARK_TBL)))
         if not frames:
@@ -2024,86 +1998,12 @@ class LuaFlexAdapter:
         cb = frames[0]
         for f in frames[1:]:
             cb = cb.unionByName(f)
-        cb = cb.localCheckpoint()
-        out_t: dict[str, DataFrame] = {}
-        for tname, tdef in self._flex.tables.items():
-            df = self._flex._callback_rows_for_table(cb, tdef)
-            if df is not None:
-                df = self._fixup_secondary_geoms(df, cb, tdef)
-                out_t[tname] = df
-        return out_t
+        return self._project(cb.localCheckpoint())
 
-    def _fixup_secondary_geoms(self, df, cb, tdef):
-        """Tables with MORE than one geometry column (indexes.lua's
-        polygons has geom + center): the unified frame's binary slot
-        carries the first; later ones travel hex-encoded in vals and
-        the whole projection is redone here with them decoded."""
-        from osm2pgsql_spark.plans.flex import GEOM_TYPES
-
-        geom_cols = [c for c in tdef.columns if c.type in GEOM_TYPES]
-        if len(geom_cols) <= 1:
-            return df
-        secondary = {c.name for c in geom_cols[1:]}
-        cbt = cb.where(F.col("tbl") == tdef.name)
-        return self._project_with_secondary(cbt, tdef, secondary)
-
-    def _project_with_secondary(self, cbt, tdef, secondary):
-        from osm2pgsql_spark.operators.geom_udfs import (
-            wkb_transform_3857,
-        )
-        from osm2pgsql_spark.plans.flex import GEOM_TYPES, ID_TYPES, FlexConfig
-
-        cols = []
-        if tdef.ids in ("way", "area"):
-            cols.append(
-                F.when(F.col("osm_kind") == "r", -F.col("osm_id"))
-                .otherwise(F.col("osm_id")).alias("osm_id"))
-        elif tdef.ids in ("node", "relation"):
-            cols.append(F.col("osm_id"))
-        elif tdef.ids == "any_single":
-            cols.append(
-                F.when(F.col("osm_kind") == "w", -F.col("osm_id"))
-                .when(F.col("osm_kind") == "r",
-                      -F.col("osm_id") - F.lit(100000000000000000).cast("long"))
-                .otherwise(F.col("osm_id")).alias("osm_id"))
-        elif tdef.ids == "any_object":
-            cols.append(F.col("osm_kind").alias("osm_type"))
-            cols.append(F.col("osm_id"))
-        not_null_conds = []
-        for cd in tdef.columns:
-            if cd.type in ID_TYPES:
-                continue
-            if cd.type in GEOM_TYPES:
-                if cd.name in secondary:
-                    g = F.unhex(F.col("vals")["__geomhex__:" + cd.name])
-                    srid_c = F.col("vals")["__geomsrid__:" + cd.name].cast("int")
-                else:
-                    g = F.col("geom")
-                    srid_c = F.col("geom_srid")
-                if cd.srid == 3857:
-                    g = F.when(srid_c == 4326, wkb_transform_3857(g)).otherwise(g)
-                elif cd.srid == 4326:
-                    g = F.when(srid_c == 4326, g)
-                cols.append(g.alias(cd.name))
-                if cd.not_null:
-                    not_null_conds.append(g.isNotNull())
-                continue
-            if cd.type == "hstore":
-                conv = F.from_json(F.col("vals")[cd.name], "map<string,string>")
-            elif cd.type in ("json", "jsonb"):
-                conv = F.col("vals")[cd.name]
-            else:
-                conv = FlexConfig._convert(F.col("vals")[cd.name], cd)
-            cols.append(conv.alias(cd.name))
-            if cd.not_null:
-                not_null_conds.append(conv.isNotNull())
-        proj = cbt.select(*cols)
-        if not_null_conds:
-            pred = not_null_conds[0]
-            for c in not_null_conds[1:]:
-                pred = pred & c
-            proj = proj.where(pred)
-        return proj
+    def _project(self, cb: DataFrame) -> dict[str, DataFrame]:
+        """The callback frame projected into every typed flex table."""
+        return {name: self._flex._callback_rows_for_table(cb, tdef)
+                for name, tdef in self._flex.tables.items()}
 
     # -- per-kind prep frames (the same joins _run_callbacks does,
     #    plus relation member geometry)

@@ -176,3 +176,151 @@ def lua(osm):
 @pytest.mark.parametrize("scheme", sorted(LUA_IDS))
 def test_lua_table_keys(lua, scheme):
     assert keyed(lua[f"t_{scheme}"]) == expected(scheme, accepts(scheme))
+
+
+# -- wrong outputs of separate id and geometry code paths -----------------
+
+def _point(wkb) -> tuple:
+    from osm2pgsql_spark.functions.geometry import from_wkb
+
+    return from_wkb(bytes(wkb))[1]
+
+
+def test_declarative_any_single_maps_ids(osm):
+    # a separate declarative copy of the id scheme wrote no key column
+    # for any_single tables (columns were ['name'])
+    cfg = FlexConfig()
+    cfg.define_table("t", ids="any_single", columns=[ColumnDef("name", "text")])
+    for kind in ALL_KINDS:
+        cfg.insert("t", kind, when=F.col("tags")["name"].isNotNull(),
+                   name=_name(kind))
+    nodes, ways, rels = osm
+    out = cfg.run(nodes=nodes, ways=ways, relations=rels)["t"]
+    assert keyed(out) == expected("any_single")
+
+
+def test_declarative_relation_into_way_table_is_negated(osm):
+    # relations in way-id tables are stored as -id
+    # (flex-table.cpp:107-130); the declarative path stored 20
+    cfg = FlexConfig()
+    cfg.define_table("t", ids="way", columns=[ColumnDef("name", "text")])
+    cfg.insert("t", "relation", name=_name("relation"))
+    nodes, ways, rels = osm
+    out = cfg.run(nodes=nodes, ways=ways, relations=rels)["t"]
+    assert keyed(out) == (["osm_id", "name"], {(-20, "r:r")})
+
+
+def test_insert_rejects_kind_the_scheme_does_not_take():
+    cfg = FlexConfig()
+    cfg.define_table("t", ids="node", columns=[ColumnDef("name", "text")])
+    with pytest.raises(ValueError,
+                       match=r"Trying to add way to table 't' \(id type 'node'\)\."):
+        cfg.insert("t", "way", name=_name("way"))
+
+
+def test_callback_two_geometry_columns_keep_their_own_values(osm):
+    # the callback frame had one geometry slot: every bytes value
+    # overwrote it, and both columns held the last one, (3.0, 4.0)
+    from osm2pgsql_spark.functions import geometry as G
+
+    cfg = FlexConfig()
+    cfg.define_table("t", ids="node", columns=[
+        ColumnDef("geom", "point"), ColumnDef("center", "point")])
+    cfg.process("node", lambda obj: [("t", {
+        "geom": G.to_wkb(G.make_point(1, 2)),
+        "center": G.to_wkb(G.make_point(3, 4)),
+    })] if obj["id"] == 1 else [])
+    nodes, ways, rels = osm
+    (row,) = cfg.run(nodes=nodes, ways=ways, relations=rels)["t"].collect()
+    assert (row["osm_id"], _point(row["geom"]), _point(row["center"])) == (
+        1, (1.0, 2.0), (3.0, 4.0))
+
+
+def test_lua_every_projected_geometry_column_is_reprojected(osm):
+    # a second geometry column re-ran a copy of the projection that
+    # knew only 3857 and 4326: both columns of 'two' held the raw
+    # lon/lat (9.0, 50.0)
+    source = """
+local one = osm2pgsql.define_node_table('one', {
+    { column = 'geom', type = 'point', projection = 25832 } })
+local two = osm2pgsql.define_node_table('two', {
+    { column = 'geom', type = 'point', projection = 25832 },
+    { column = 'center', type = 'point', projection = 25832 } })
+function osm2pgsql.process_node(object)
+    if object.tags.name == nil then return end
+    one:insert{ geom = object:as_point() }
+    two:insert{ geom = object:as_point(), center = object:as_point() }
+end
+"""
+    nodes, ways, rels = osm
+    out = LuaFlexAdapter(source).run(nodes=nodes, ways=ways, relations=rels)
+    (one,) = out["one"].collect()
+    (two,) = out["two"].collect()
+    utm = (500000.0, 5538630.70)
+    for p in (_point(one["geom"]), _point(two["geom"]), _point(two["center"])):
+        assert p == pytest.approx(utm, abs=0.01)
+
+
+STYLE = '''
+from osm2pgsql_spark.plans.flex import ColumnDef, FlexConfig
+
+ID_SPACES = {"t": "way"}
+
+
+def tables(spark, nodes, ways, rels):
+    cfg = FlexConfig()
+    cfg.define_table("t", ids="way", columns=[ColumnDef("name", "text")])
+    for kind in ("way", "relation"):
+        cfg.process(kind, lambda obj, kind=kind: [
+            ("t", {"name": kind[:3] + ":" + obj["tags"]["name"]})
+        ] if "name" in obj["tags"] else [])
+    return cfg.run(nodes=nodes, ways=ways, relations=rels)
+'''
+
+RENAME_OSC = """<?xml version='1.0'?>
+<osmChange version="0.6">
+  <modify><relation id="20" version="2">
+    <member type="way" ref="11" role="outer"/>
+    <tag k="type" v="multipolygon"/><tag k="name" v="new"/>
+  </relation></modify>
+</osmChange>
+"""
+
+
+def _tool_args(inp, out, **over):
+    import argparse
+
+    base = dict(
+        input=str(inp), out_dir=str(out), append=False, drop=False,
+        style=None, output="flex", region_db=None, bbox=None, pg=None,
+        input_reader="", expire_tiles=0, expire_output=None,
+        expire_bbox_size=20000.0, refresh="auto", tables_format="plain",
+        prefix="planet_osm", schema="public", middle_schema="",
+        output_pgsql_schema="", latlong=False, merc=False, proj=None)
+    base.update(over)
+    return argparse.Namespace(**base)
+
+
+def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
+    # the way scheme's touched keys held way ids only, so the refresh
+    # kept the stale (-20, 'rel:old') beside the new row
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "import_tool", os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "tools", "import_tool.py"))
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    style = tmp_path / "style.py"
+    style.write_text(STYLE)
+    src = tmp_path / "in.opl"
+    src.write_text(OPL.replace("name=r", "name=old"))
+    osc = tmp_path / "diff.osc"
+    osc.write_text(RENAME_OSC)
+    db = tmp_path / "db"
+    tool.cmd_create(_tool_args(src, db, style=str(style)), spark)
+    tool.cmd_append(_tool_args(osc, db, style=str(style), append=True,
+                               refresh="incremental"), spark)
+    rows = {tuple(r) for r in spark.read.parquet(str(db / "tables" / "t")).collect()}
+    assert rows == {(10, "way:w"), (-20, "rel:new")}

@@ -1062,33 +1062,45 @@ class TestExpireBboxSize:
     (expire-config.hpp:16-45, expire-tiles.cpp:116-135; default 20000,
     options.hpp:99)."""
 
-    def _tiles(self, tmp_path, extra):
-        tmp_path.mkdir(parents=True, exist_ok=True)
-        src = tmp_path / "in.opl"
-        src.write_text(BIG_POLY_OPL)
-        out = tmp_path / "db"
-        r = _run([str(src), str(out)])
-        assert r.returncode == 0, r.stderr[-2000:]
-        osc = tmp_path / "diff.osc"
-        osc.write_text(BIG_POLY_OSC)
-        expire = tmp_path / "dirty.list"
-        r = _run([str(osc), str(out), "--append", "--expire-tiles", "12",
-                  "--expire-output", str(expire), *extra])
-        assert r.returncode == 0, r.stderr[-2000:]
-        return {t for t in expire.read_text().strip().splitlines() if t}
+    @pytest.fixture(scope="class")
+    def tiles(self, tmp_path_factory):
+        """The diff's dirty tiles under the default, 0 and 100000
+        --expire-bbox-size: one create, then one append per setting on
+        a copy of the created database."""
+        import shutil
 
-    def test_hybrid_default_expires_boundary_only(self, tmp_path):
-        hybrid = self._tiles(tmp_path / "h", [])
-        full = self._tiles(tmp_path / "f", ["--expire-bbox-size", "0"])
+        d = tmp_path_factory.mktemp("bbox")
+        src = d / "in.opl"
+        src.write_text(BIG_POLY_OPL)
+        base = d / "db"
+        r = _run([str(src), str(base)])
+        assert r.returncode == 0, r.stderr[-2000:]
+        osc = d / "diff.osc"
+        osc.write_text(BIG_POLY_OSC)
+        out = {}
+        for size in ("default", "0", "100000"):
+            db = d / f"db-{size}"
+            shutil.copytree(base, db)
+            expire = d / f"dirty-{size}.list"
+            extra = [] if size == "default" else ["--expire-bbox-size", size]
+            r = _run([str(osc), str(db), "--append", "--expire-tiles", "12",
+                      "--expire-output", str(expire), *extra])
+            assert r.returncode == 0, r.stderr[-2000:]
+            out[size] = {t for t in expire.read_text().strip().splitlines() if t}
+        return out
+
+    def test_hybrid_default_expires_boundary_only(self, tiles):
+        hybrid = tiles["default"]
+        full = tiles["0"]
         # boundary tiles are a strict subset of the filled block: the
         # polygon spans ~6 x ~5 z12 tiles, so the interior is non-empty
         assert hybrid < full
         assert len(full) - len(hybrid) >= 4
 
-    def test_threshold_above_bbox_keeps_full_area(self, tmp_path):
+    def test_threshold_above_bbox_keeps_full_area(self, tiles):
         # limit larger than the polygon bbox -> full-area fill again
-        full = self._tiles(tmp_path / "f", ["--expire-bbox-size", "0"])
-        big = self._tiles(tmp_path / "b", ["--expire-bbox-size", "100000"])
+        full = tiles["0"]
+        big = tiles["100000"]
         assert big == full
 
 

@@ -105,7 +105,7 @@ def load_style(path: str | None, region_db: str | None = None,
         # the Catalyst fast path, anything else on the interpreter)
         from osm2pgsql_spark.plans.lua_config import load_lua_config
 
-        cfg, model = load_lua_config(path)
+        cfg, _model = load_lua_config(path)
         if region_db is not None and hasattr(cfg, "region_db"):
             cfg.region_db = region_db
         if hasattr(cfg, "mode"):
@@ -120,15 +120,12 @@ def load_style(path: str | None, region_db: str | None = None,
         # and process_deleted_* passes for ids=nil log tables
         lua_tables.cfg = cfg
 
-        # None = ids=nil append-only log table; any-ids tables ARE
-        # id-tracked (delete+reinsert by mapped id, flex-table.cpp
-        # map_id) — only 'none' may land in log_tables
+        # None = an ids=nil append-only log table (or a tile table,
+        # whose rows no object id refreshes); every other scheme is
+        # id-tracked (delete+reinsert by mapped id, flex-table.cpp map_id)
         id_spaces = {
-            t.name: {"node": "node", "way": "way", "area": "area",
-                     "relation": "relation", "any": "any_object",
-                     "any_object": "any_object",
-                     "any_single": "any_single"}.get(t.kind)
-            for t in model.tables
+            name: None if t.ids in ("none", "tile") else t.ids
+            for name, t in cfg.tables.items()
         }
         return lua_tables, id_spaces
     spec = importlib.util.spec_from_file_location("osm2pgsql_style", path)
@@ -362,64 +359,40 @@ def _write_tables_merge(
     plain format lacks: its append rewrites every output table in
     full, O(planet) per minutely diff at scale).  ids=nil log tables
     stay plain parquet; appends only ADD files there."""
+    from pyspark.sql import Observation
+
     from osm2pgsql_spark.streaming.merge_sink import ParquetMergeTable
 
-    counts = {}
+    logs = {n: df for n, df in tables.items() if (id_spaces or {}).get(n) is None}
+    counts = _write_tables(logs, out_dir)
     for name, df in tables.items():
-        path = os.path.join(out_dir, "tables", name)
-        if (id_spaces or {}).get(name) is None:
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = df.sparkSession.read.parquet(path).count()
+        if name in logs:
             continue
         if "osm_id" not in df.columns:
             raise SystemExit(
                 f"--tables-format merge needs an osm_id column in table {name!r}")
-        mt = ParquetMergeTable(path, id_col="osm_id")
-        mt.write_full(df)
-        counts[name] = mt.read(df.sparkSession).count()
+        # counted on the write job, like _write_tables
+        rows = Observation(f"rows:{name}")
+        ParquetMergeTable(os.path.join(out_dir, "tables", name), id_col="osm_id") \
+            .write_full(df.observe(rows, F.count(F.lit(1)).alias("n")))
+        counts[name] = rows.get["n"]
     return counts
-
-
-def _geom_tile_kernel(maxzoom: int, buffer: float, max_bbox: float = 20000.0):
-    """mapInPandas kernel: WKB geometry column -> (x, y) dirty tiles
-    at maxzoom, via the reference's expire walk.  max_bbox is the
-    --expire-bbox-size hybrid threshold (default 20000 m, options.hpp:
-    99): polygons larger than it expire the boundary only
-    (output-flex.cpp:1377-1380, expire-tiles.cpp:116-135); 0 forces
-    full-area mode."""
-    def batches(it):
-        import pandas as pd
-
-        from osm2pgsql_spark.functions.geometry import from_wkb
-        from osm2pgsql_spark.operators.expire import ExpireConfig, tiles_for_geometry
-
-        cfg = ExpireConfig(
-            maxzoom=maxzoom, buffer=buffer,
-            mode="hybrid" if max_bbox > 0.0 else "full_area",
-            full_area_limit=max_bbox,
-        )
-        for pdf in it:
-            rows = []
-            for wkb in pdf["geom"]:
-                if wkb is None:
-                    continue
-                for x, y in tiles_for_geometry(from_wkb(bytes(wkb)), cfg):
-                    rows.append({"x": int(x), "y": int(y)})
-            yield pd.DataFrame(rows, columns=["x", "y"])
-
-    return batches
 
 
 def expire_tiles_of(
     tables: dict[str, DataFrame], touched: DataFrame | None, maxzoom: int,
     buffer: float = 0.1, max_bbox: float = 20000.0,
 ) -> DataFrame | None:
-    """Distinct (x, y) dirty tiles across every geometry column of the
-    touched rows (old or new side; caller unions both)."""
-    spark = None
+    """Distinct (x, y) dirty tiles at maxzoom across every geometry
+    column of the touched rows (old or new side; caller unions both).
+    max_bbox is the --expire-bbox-size hybrid threshold (default
+    20000 m, options.hpp:99): polygons larger than it expire the
+    boundary only (output-flex.cpp:1377-1380, expire-tiles.cpp:116-135);
+    0 forces full-area mode."""
+    from osm2pgsql_spark.operators.expire import ExpireConfig, dirty_tiles
+
     parts = []
     for df in tables.values():
-        spark = df.sparkSession
         geom_cols = [c for c, t in df.dtypes if t == "binary"]
         if not geom_cols:
             continue
@@ -436,9 +409,13 @@ def expire_tiles_of(
     allg = parts[0]
     for p in parts[1:]:
         allg = allg.unionByName(p)
-    return allg.mapInPandas(
-        _geom_tile_kernel(maxzoom, buffer, max_bbox), "x int, y int"
-    ).distinct()
+    cfg = ExpireConfig(
+        maxzoom=maxzoom, buffer=buffer,
+        mode="hybrid" if max_bbox > 0.0 else "full_area",
+        full_area_limit=max_bbox,
+    )
+    return dirty_tiles(allg, cfg).select(
+        F.col("x").cast("int"), F.col("y").cast("int"))
 
 
 def _data_timestamp(frames) -> "datetime.datetime | None":
@@ -668,41 +645,20 @@ def cmd_create(args, spark) -> None:
 
 def _touched_keys(space: str, node_ids: DataFrame, way_ids: DataFrame,
                   rel_ids: DataFrame) -> tuple[DataFrame, list[str]]:
-    """Touched-object keys for one table's id space, in table-column
-    form, plus the join columns.  Mapped-id schemes follow the
-    reference's flex_table_t::map_id (flex-table.cpp:107-130): area
-    tables store ways +id / relations -id; single-column any tables
-    store node id / way -id / relation -id-10^17; multicolumn any
-    tables key on (osm_type, osm_id) raw."""
-    def _as(df: DataFrame, expr) -> DataFrame:
-        return df.select(expr.alias("osm_id"))
+    """Touched-object keys for one table's id scheme, in table-column
+    form, plus the join columns: the scheme's own key mapping
+    (plans/flex.key_columns, the reference's flex_table_t::map_id) over
+    the touched ids of every object kind the scheme accepts."""
+    from osm2pgsql_spark.plans.flex import ACCEPTS, key_columns
 
-    if space == "node":
-        return _as(node_ids, F.col("id")), ["osm_id"]
-    if space == "way":
-        return _as(way_ids, F.col("id")), ["osm_id"]
-    if space == "relation":
-        return _as(rel_ids, F.col("id")), ["osm_id"]
-    if space == "area":  # ways +id, relations -id
-        return (_as(way_ids, F.col("id"))
-                .unionByName(_as(rel_ids, -F.col("id")))
-                .distinct()), ["osm_id"]
-    if space == "any_single":
-        return (_as(node_ids, F.col("id"))
-                .unionByName(_as(way_ids, -F.col("id")))
-                .unionByName(_as(
-                    rel_ids,
-                    -F.col("id") - F.lit(100000000000000000).cast("long")))
-                .distinct()), ["osm_id"]
-    if space == "any_object":
-        def _typed(df: DataFrame, t: str) -> DataFrame:
-            return df.select(F.lit(t).alias("osm_type"),
-                             F.col("id").alias("osm_id"))
-        return (_typed(node_ids, "n")
-                .unionByName(_typed(way_ids, "w"))
-                .unionByName(_typed(rel_ids, "r"))
-                .distinct()), ["osm_type", "osm_id"]
-    raise SystemExit(f"unsupported id space {space!r} for incremental")
+    if space in ("none", "tile"):
+        raise SystemExit(f"unsupported id space {space!r} for incremental")
+    ids = {"node": node_ids, "way": way_ids, "relation": rel_ids}
+    keys = None
+    for kind in ACCEPTS[space]:
+        part = ids[kind].select(*key_columns(space, kind, F.col("id")))
+        keys = part if keys is None else keys.unionByName(part)
+    return keys.distinct(), keys.columns
 
 
 def _pg_middle_frames(prefix: str, nodes, ways, rels,
@@ -1021,105 +977,38 @@ def cmd_append(args, spark) -> None:
     # touched keys from the touched buckets only, insert the new rows;
     # log tables only ADD files.  Refresh I/O ~ diff, not table size.
     fmt = props.get("tables_format") or "plain"
-    if fmt == "merge":
-        if not incremental:
-            raise SystemExit(
-                "--tables-format merge requires an incremental-capable "
-                "style (ID_SPACES)")
-        from osm2pgsql_spark.streaming.merge_sink import ParquetMergeTable
+    if fmt == "merge" and not incremental:
+        raise SystemExit(
+            "--tables-format merge requires an incremental-capable "
+            "style (ID_SPACES)")
+    if getattr(args, "pg", None) and not incremental:
+        raise SystemExit(
+            "--append --pg needs an incremental-capable style "
+            "(ID_SPACES) — the live diff replay is id-tracked")
 
-        if getattr(args, "pg", None):
-            # BEFORE the middle/output merges swap the parquet files
-            # the change-set lineage still reads (same ordering rule
-            # as the refreshed-outputs materialization below)
-            _pg_apply_append(args, new_side, log_new, id_spaces,
-                             node_ids, way_ids, rel_ids, log_tables,
-                             diffs=(n_diff, w_diff, r_diff))
-        counts = {}
-        for name, new_rows in new_side.items():
-            keys, key_cols = _touched_keys(
-                id_spaces[name], node_ids, way_ids, rel_ids)
-            mt = ParquetMergeTable(
-                os.path.join(args.out_dir, "tables", name), id_col="osm_id")
-            buckets = mt.merge_refresh(
-                spark, keys, new_rows.localCheckpoint(), key_cols)
-            counts[name] = mt.read(spark).count()
-            print(f"table {name}: merged {len(buckets)} bucket(s)")
-        for name in log_tables:
-            path = os.path.join(args.out_dir, "tables", name)
-            add = log_new.get(name)
-            if add is not None:
-                add.write.mode("append").parquet(path)
-            if os.path.exists(path):
-                counts[name] = spark.read.parquet(path).count()
-        mids["nodes"].merge_diff(spark, n_diff)
-        mids["ways"].merge_diff(spark, w_diff)
-        mids["rels"].merge_diff(spark, r_diff)
-        props.set(
-            "append_timestamp", datetime.datetime.utcnow().isoformat() + "Z")
-        diff_ts = _data_timestamp((n_diff, w_diff, r_diff))
-        if diff_ts is not None:
-            cur = props.get("current_timestamp")
-            new = diff_ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-            if cur is None or new > cur:
-                props.set("current_timestamp", new)
-        props.save()
-        for name, n in counts.items():
-            print(f"table {name}: {n} rows")
-        if getattr(args, "pg", None):
-            from osm2pgsql_spark.sinks.pg_live import (
-                parse_conninfo, pg_write_properties)
-
-            pg_write_properties(parse_conninfo(args.pg), props.as_dict(),
-                                schema=resolve_schemas(args)[0])
-        return
-
-    # materialize the refreshed outputs BEFORE the middle MERGE swaps
-    # the parquet files their lineage still reads
-    if incremental:
-        refreshed = {}
-        for name, new_rows in new_side.items():
-            path = os.path.join(args.out_dir, "tables", name)
-            old_rows = spark.read.parquet(path)
-            keep = old_rows.join(*_touched_keys(
-                id_spaces[name], node_ids, way_ids, rel_ids), "left_anti")
-            refreshed[name] = keep.unionByName(new_rows).localCheckpoint()
-    else:
-        refreshed = {n: df.localCheckpoint() for n, df in new_side.items()}
-    for name in log_tables:
-        # append-only: old rows always kept, file-pass + deleted rows added
-        path = os.path.join(args.out_dir, "tables", name)
-        old_rows = spark.read.parquet(path) if os.path.exists(path) else None
-        add = log_new.get(name)
-        if old_rows is None and add is None:
-            continue
-        if old_rows is None:
-            refreshed[name] = add.localCheckpoint()
-        elif add is None:
-            refreshed[name] = old_rows.localCheckpoint()
-        else:
-            refreshed[name] = old_rows.unionByName(
-                add, allowMissingColumns=True).localCheckpoint()
-
+    # the refreshed outputs, the live-database replay and the output
+    # merge all read the change-set lineage (touched closure,
+    # affected-id frames), which still reads the middle parquet files
+    # the middle MERGE below swaps: they all run before it
+    if fmt != "merge":
+        refreshed = _refreshed_tables(spark, args.out_dir, new_side, log_new,
+                                      log_tables, id_spaces, incremental,
+                                      (node_ids, way_ids, rel_ids))
     if getattr(args, "pg", None):
-        # live-database twin of the refresh below.  MUST run before
-        # the middle MERGE: the change-set lineage (touched closure,
-        # affected-id frames) still reads the middle parquet files the
-        # merge is about to swap (same rule as the refreshed-outputs
-        # materialization above).
-        if not incremental:
-            raise SystemExit(
-                "--append --pg needs an incremental-capable style "
-                "(ID_SPACES) — the live diff replay is id-tracked")
         _pg_apply_append(args, new_side, log_new, id_spaces,
                          node_ids, way_ids, rel_ids, log_tables,
                          diffs=(n_diff, w_diff, r_diff))
+    if fmt == "merge":
+        counts = _merge_tables(spark, args.out_dir, new_side, log_new,
+                               log_tables, id_spaces,
+                               (node_ids, way_ids, rel_ids))
 
     # middle MERGE (partition-pruned on the touched id buckets)
     mids["nodes"].merge_diff(spark, n_diff)
     mids["ways"].merge_diff(spark, w_diff)
     mids["rels"].merge_diff(spark, r_diff)
-    counts = _write_tables(refreshed, args.out_dir)
+    if fmt != "merge":
+        counts = _write_tables(refreshed, args.out_dir)
     props.set(
         "append_timestamp", datetime.datetime.utcnow().isoformat() + "Z"
     )
@@ -1141,6 +1030,64 @@ def cmd_append(args, spark) -> None:
 
         pg_write_properties(parse_conninfo(args.pg), props.as_dict(),
                             schema=resolve_schemas(args)[0])
+
+
+def _refreshed_tables(spark, out_dir: str, new_side: dict, log_new: dict,
+                      log_tables: set, id_spaces, incremental: bool,
+                      touched: tuple) -> dict[str, DataFrame]:
+    """Plain-format append: every output table in full, materialized.
+    Id-tracked tables keep their rows of untouched keys and take the
+    new rows; log tables keep all rows and take the added ones."""
+    if incremental:
+        refreshed = {}
+        for name, new_rows in new_side.items():
+            old_rows = spark.read.parquet(os.path.join(out_dir, "tables", name))
+            keep = old_rows.join(
+                *_touched_keys(id_spaces[name], *touched), "left_anti")
+            refreshed[name] = keep.unionByName(new_rows).localCheckpoint()
+    else:
+        refreshed = {n: df.localCheckpoint() for n, df in new_side.items()}
+    for name in log_tables:
+        # append-only: old rows always kept, file-pass + deleted rows added
+        path = os.path.join(out_dir, "tables", name)
+        old_rows = spark.read.parquet(path) if os.path.exists(path) else None
+        add = log_new.get(name)
+        if old_rows is None and add is None:
+            continue
+        if old_rows is None:
+            refreshed[name] = add.localCheckpoint()
+        elif add is None:
+            refreshed[name] = old_rows.localCheckpoint()
+        else:
+            refreshed[name] = old_rows.unionByName(
+                add, allowMissingColumns=True).localCheckpoint()
+    return refreshed
+
+
+def _merge_tables(spark, out_dir: str, new_side: dict, log_new: dict,
+                  log_tables: set, id_spaces, touched: tuple) -> dict[str, int]:
+    """Merge-format append: each id-tracked table rewrites only the
+    buckets holding touched keys; log tables add files.  Returns the
+    tables' row counts."""
+    from osm2pgsql_spark.streaming.merge_sink import ParquetMergeTable
+
+    counts = {}
+    for name, new_rows in new_side.items():
+        keys, key_cols = _touched_keys(id_spaces[name], *touched)
+        mt = ParquetMergeTable(
+            os.path.join(out_dir, "tables", name), id_col="osm_id")
+        buckets = mt.merge_refresh(
+            spark, keys, new_rows.localCheckpoint(), key_cols)
+        counts[name] = mt.read(spark).count()
+        print(f"table {name}: merged {len(buckets)} bucket(s)")
+    for name in log_tables:
+        path = os.path.join(out_dir, "tables", name)
+        add = log_new.get(name)
+        if add is not None:
+            add.write.mode("append").parquet(path)
+        if os.path.exists(path):
+            counts[name] = spark.read.parquet(path).count()
+    return counts
 
 
 def main() -> None:
