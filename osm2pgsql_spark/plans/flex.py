@@ -123,6 +123,22 @@ def key_columns(ids: str, kind: str | Column, osm_id: Column,
     return [mapped.alias("osm_id")]
 
 
+def touched_keys(ids: str, node_ids: DataFrame, way_ids: DataFrame,
+                 rel_ids: DataFrame) -> tuple[DataFrame, list[str]]:
+    """The keys an <ids> table stores for the touched objects (frames of
+    `id`, one per kind), plus the key column names: key_columns over
+    the touched ids of every kind the scheme accepts.  Append refresh
+    and expiry select a table's touched rows by semi-joining on them."""
+    if ids in ("none", "tile"):
+        raise ValueError(f"table scheme {ids!r} keys no object ids")
+    by_kind = {"node": node_ids, "way": way_ids, "relation": rel_ids}
+    keys = None
+    for kind in ACCEPTS[ids]:
+        part = by_kind[kind].select(*key_columns(ids, kind, F.col("id")))
+        keys = part if keys is None else keys.unionByName(part)
+    return keys.distinct(), keys.columns
+
+
 @dataclass
 class ColumnDef:
     """One declared output column (flex-table-column.hpp:107-145)."""
@@ -453,7 +469,7 @@ class FlexConfig:
         self,
         old_tables: dict[str, DataFrame],
         new_tables: dict[str, DataFrame],
-        touched_ids: DataFrame,
+        touched: tuple[DataFrame, DataFrame, DataFrame],
     ) -> dict[str, DataFrame]:
         """Dirty tiles for one append batch: the union of the OLD and
         the NEW geometry's tiles of every touched object — the
@@ -462,21 +478,25 @@ class FlexConfig:
         expire_from_result on insert), which is why a moved node dirties
         both where the way was and where it now is
         (tests/bdd/flex/expire-diff.feature).  A full import expires
-        nothing (the reference only records expiry in append mode);
-        only rows semi-joined to `touched_ids` (column: osm_id)
-        contribute."""
-        ids = touched_ids.select(
-            F.col(touched_ids.columns[0]).alias("osm_id")
-        ).distinct()
+        nothing (the reference only records expiry in append mode).
 
-        def touched(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        touched: the touched node, way and relation ids (frames of
+        `id`).  Each table keeps the rows of its touched keys under its
+        own id scheme (touched_keys): a relation stored as -id expires
+        with the relation, a node never with the way of the same id.
+        Tables without object keys (none, tile) contribute every row."""
+        keys = {name: touched_keys(t.ids, *touched)
+                for name, t in self.tables.items()
+                if t.ids not in ("none", "tile")}
+
+        def touched_rows(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
             return {
-                name: df.join(ids, "osm_id", "leftsemi")
+                name: df.join(*keys[name], "leftsemi") if name in keys else df
                 for name, df in tables.items()
             }
 
-        old_t = self.compute_expire(touched(old_tables))
-        new_t = self.compute_expire(touched(new_tables))
+        old_t = self.compute_expire(touched_rows(old_tables))
+        new_t = self.compute_expire(touched_rows(new_tables))
         out: dict[str, DataFrame] = {}
         for name in set(old_t) | set(new_t):
             parts = [t for t in (old_t.get(name), new_t.get(name)) if t is not None]

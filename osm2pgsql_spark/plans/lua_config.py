@@ -1,23 +1,27 @@
-"""Lua flex-config reader: the declarative compatibility subset.
+"""Lua flex-config reader: the declarative fast path.
 
 Real osm2pgsql users own `.lua` flex configs
 (/root/reference/src/flex-lua-table.cpp:40-197 table definitions,
-flex-config/generic.lua as the canonical example).  This module parses
-the DECLARATIVE part of such configs — table definitions, column
-specs, delete-key lists, area-tag helper key lists — and recognizes
+flex-config/generic.lua as the canonical example).  A config's
+DEFINITIONS have one reader, the interpreter's osm2pgsql API
+(plans/lua_flex.py): a probe run of the chunk's top level yields the
+tables (with the reference's validation and error wording), the expire
+outputs and the chunk's locals.  This module adds the fast path for
 the canonical process-callback SHAPES of the generic.lua family,
-compiling everything into the engine's FlexConfig (plans/flex.py).
+compiling them into Catalyst rules on the FlexConfig the probe's
+definitions build (plans/flex.py).
 
 Honest scope (documented, enforced with clear errors):
 
-* Fully parsed: `osm2pgsql.define_{node,way,area,relation}_table(name,
-  columns[, options])` and `osm2pgsql.define_table{...}` with nested
-  Lua table constructors; `local NAME = <scalar literal>` bindings are
-  substituted (the `local srid = 3857` idiom).
-* Recognized helper idioms: `local delete_keys = {...}` +
-  `osm2pgsql.make_clean_tags_func(delete_keys)` (tag cleanup with '*'
-  prefix wildcards) and `local function has_area_tags(tags) ... end`
-  (the area=yes/no override + key-presence list).
+* Definitions: whatever the interpreter accepts — `define_table`, its
+  node/way/area/relation wrappers and `define_expire_output`.  Insert
+  targets resolve through the chunk's variables (`tables.points`,
+  `pois`), and scalar locals (the `local srid = 3857` idiom) are
+  literals to insert values.
+* Recognized helper idioms: `osm2pgsql.make_clean_tags_func(LIST)`
+  with LIST a chunk variable (tag cleanup with '*' prefix wildcards)
+  and `local function has_area_tags(tags) ... end` (the area=yes/no
+  override + key-presence list).
 * Recognized callback shapes: straight-line `process_node` /
   `process_way` / `process_relation` bodies made of optional
   clean-tags guards, if/else or if/return chains whose conditions use
@@ -27,151 +31,37 @@ Honest scope (documented, enforced with clear errors):
   `object.tags.KEY` / literals as values and `object:as_point()` /
   `as_linestring()` / `as_polygon()` / `as_multilinestring()` /
   `as_multipolygon()` (optionally `:line_merge()`) geometries.
-* Anything else (arbitrary Lua) raises LuaConfigError pointing at the
-  Python DSL — a deliberate boundary, not a silent misread: this
-  engine replaces the per-object Lua interpreter with vectorized
-  Catalyst rules (SURVEY.md §1.5), so only code that MEANS a
-  declarative rule can be accepted.
+* Any other callback code raises LuaConfigError inside this module,
+  and load_lua_config runs the config on the interpreter instead
+  (plans/lua_flex.LuaFlexAdapter, same probe).
 """
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from osm2pgsql_spark.lua.interp import LuaTable as _LuaValue
+from osm2pgsql_spark.lua.interp import tokenize
+from osm2pgsql_spark.plans.flex import GEOM_TYPES
+from osm2pgsql_spark.plans.lua_flex import (
+    LuaFlexAdapter,
+    LuaFlexRuntime,
+    flex_config_of,
+)
+
 
 class LuaConfigError(ValueError):
     pass
 
 
-@dataclass(frozen=True)
-class _LuaRef:
-    """A dotted name that names another config object (an expire
-    output, a table variable) rather than a scalar."""
-
-    path: str
-
-
-# ---------------------------------------------------------- tokenizer
-
-_TOKEN_RE = re.compile(
-    r"""
-    (?P<ws>\s+)
-  | (?P<comment>--\[\[.*?\]\]|--[^\n]*)
-  | (?P<string>'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*")
-  | (?P<number>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-  | (?P<name>[A-Za-z_][A-Za-z0-9_]*)
-  | (?P<punct>\.\.|==|~=|<=|>=|[{}()\[\],=:;.<>+*/#-])
-    """,
-    re.VERBOSE | re.DOTALL,
-)
-
-
-def _tokenize(text: str) -> list[tuple[str, str, int]]:
-    """(kind, value, offset) triples, comments/whitespace dropped."""
-    out = []
-    pos = 0
-    while pos < len(text):
-        m = _TOKEN_RE.match(text, pos)
-        if m is None:
-            raise LuaConfigError(f"cannot tokenize Lua at offset {pos}: "
-                                 f"{text[pos:pos+40]!r}")
-        kind = m.lastgroup
-        if kind not in ("ws", "comment"):
-            out.append((kind, m.group(), m.start()))
-        pos = m.end()
-    return out
-
-
 def _unquote(s: str) -> str:
     body = s[1:-1]
     return re.sub(r"\\(.)", lambda m: {"n": "\n", "t": "\t"}.get(m.group(1), m.group(1)), body)
-
-
-class _Parser:
-    """Recursive-descent over the token list for VALUES (scalars and
-    table constructors) with a scalar-local environment."""
-
-    def __init__(self, tokens, i: int, env: dict):
-        self.t = tokens
-        self.i = i
-        self.env = env
-
-    def peek(self):
-        return self.t[self.i] if self.i < len(self.t) else ("eof", "", -1)
-
-    def next(self):
-        tok = self.peek()
-        self.i += 1
-        return tok
-
-    def expect(self, value: str):
-        kind, v, off = self.next()
-        if v != value:
-            raise LuaConfigError(f"expected {value!r}, got {v!r} at offset {off}")
-
-    def parse_value(self):
-        kind, v, off = self.peek()
-        if v == "{":
-            return self.parse_table()
-        if kind == "string":
-            self.next()
-            return _unquote(v)
-        if kind == "number":
-            self.next()
-            return float(v) if ("." in v or "e" in v or "E" in v) else int(v)
-        if kind == "name":
-            if v in ("true", "false"):
-                self.next()
-                return v == "true"
-            if v == "nil":
-                self.next()
-                return None
-            # simple local-variable substitution (the `local srid = 3857`
-            # idiom); dotted names become symbolic references (the
-            # `expire = expire_outputs.pois` idiom)
-            self.next()
-            path = [v]
-            while self.peek()[1] == ".":
-                self.next()
-                path.append(self.next()[1])
-            if len(path) > 1:
-                return _LuaRef(".".join(path))
-            if v in self.env:
-                return self.env[v]
-            raise LuaConfigError(f"unknown name {v!r} at offset {off}; only "
-                                 "`local NAME = <literal>` bindings resolve")
-        raise LuaConfigError(f"unexpected token {v!r} at offset {off}")
-
-    def parse_table(self):
-        """Lua table constructor -> (list_items, dict_items)."""
-        self.expect("{")
-        items: list = []
-        fields: dict = {}
-        while True:
-            kind, v, off = self.peek()
-            if v == "}":
-                self.next()
-                return items, fields
-            if kind == "name" and self.i + 1 < len(self.t) and self.t[self.i + 1][1] == "=":
-                key = v
-                self.next()
-                self.next()
-                fields[key] = self.parse_value()
-            elif v == "[":
-                self.next()
-                key = self.parse_value()
-                self.expect("]")
-                self.expect("=")
-                fields[key] = self.parse_value()
-            else:
-                items.append(self.parse_value())
-            kind, v, off = self.peek()
-            if v in (",", ";"):
-                self.next()
 
 
 # ------------------------------------------------------ config model
@@ -180,19 +70,19 @@ class _Parser:
 class LuaColumn:
     column: str
     type: str
-    projection: int | None = None
+    projection: int | None = None  # geometry columns: their SRID
     not_null: bool = False
     create_only: bool = False
-    expire: str | None = None
+    expire: str | None = None  # comma-joined expire-output variables
 
 
 @dataclass
 class LuaTable:
     var: str  # the Lua variable it was assigned to, e.g. tables.points
     name: str
-    kind: str  # node | way | area | relation | any (define_table ids)
+    kind: str  # the id scheme: node | way | area | relation |
+    #            any_object | any_single | tile | none
     columns: list[LuaColumn] = field(default_factory=list)
-    options: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -202,7 +92,6 @@ class LuaExpireOutput:
     minzoom: int | None = None
     filename: str | None = None
     table: str | None = None
-    schema: str | None = None
 
 
 @dataclass
@@ -239,172 +128,77 @@ class LuaConfigModel:
     way_inserts: list[LuaInsert] = field(default_factory=list)
     relation_inserts: list[LuaInsert] = field(default_factory=list)
 
-    def table_by_var(self, var: str) -> LuaTable:
-        for t in self.tables:
-            if t.var == var:
-                return t
-        raise LuaConfigError(f"insert into unknown table variable {var!r}")
+
+# ------------------------------------------- definitions (the probe)
+
+def _lookup(probe, path: str):
+    """The value a dotted variable path (`tables.points`) holds after
+    the chunk ran: chunk locals first, then globals; None if unbound."""
+    head, *rest = path.split(".")
+    scope = probe.interp.chunk_scope.vars
+    v = scope[head] if head in scope else probe.interp.globals.get(head)
+    for name in rest:
+        v = v.get(name) if isinstance(v, _LuaValue) else None
+    return v
 
 
-# --------------------------------------------------- declarative scan
-
-def _scan_locals(text: str) -> dict:
-    env: dict = {}
-    for m in re.finditer(
-        r"^\s*local\s+([A-Za-z_]\w*)\s*=\s*"
-        r"(-?\d+(?:\.\d+)?|'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|true|false)\s*$",
-        text, re.MULTILINE,
-    ):
-        name, raw = m.group(1), m.group(2)
-        if raw in ("true", "false"):
-            env[name] = raw == "true"
-        elif raw[0] in "'\"":
-            env[name] = _unquote(raw)
-        else:
-            env[name] = float(raw) if "." in raw else int(raw)
-    return env
-
-
-_DEFINE_RE = re.compile(
-    r"([A-Za-z_][\w.]*)\s*=\s*osm2pgsql\.define_(node|way|area|relation)_table\s*\(",
-)
-_DEFINE_GENERIC_RE = re.compile(
-    r"([A-Za-z_][\w.]*)\s*=\s*osm2pgsql\.define_table\s*[({]",
-)
-
-
-def _parse_columns(raw_cols) -> list[LuaColumn]:
-    items, _fields = raw_cols
-    out = []
-    for it in items:
-        if not isinstance(it, tuple):
-            raise LuaConfigError("column spec must be a table")
-        _, f = it
-        if "column" not in f:
-            raise LuaConfigError(f"column spec without 'column': {f!r}")
-        out.append(LuaColumn(
-            column=f["column"],
-            type=f.get("type", "text"),
-            projection=int(f["projection"]) if "projection" in f else None,
-            not_null=bool(f.get("not_null", False)),
-            create_only=bool(f.get("create_only", False)),
-            expire=_expire_name(f.get("expire")),
-        ))
+def _handle_vars(probe, key: str) -> dict[str, str]:
+    """{handle name: variable path} for the handles carrying `key`
+    (table handles `__handle__`, expire outputs `__name__`) that the
+    chunk bound to a variable or to a field of a table held in one."""
+    out: dict[str, str] = {}
+    for scope in (probe.interp.chunk_scope.vars, probe.interp.globals.hash):
+        for name, v in scope.items():
+            if not isinstance(v, _LuaValue):
+                continue
+            if key in v.hash:
+                out.setdefault(v.hash[key], name)
+                continue
+            for fld, sub in v.hash.items():
+                if isinstance(sub, _LuaValue) and key in sub.hash:
+                    out.setdefault(sub.hash[key], f"{name}.{fld}")
     return out
 
 
-def _expire_name(v):
-    if v is None:
-        return None
-    if isinstance(v, str):
-        return v
-    if isinstance(v, _LuaRef):
-        return v.path
-    # expire = { output_ref } / { { output = ref } } forms
-    if isinstance(v, tuple):
-        items, fields = v
-        if "output" in fields:
-            return _expire_name(fields["output"])
-        if items:
-            return _expire_name(items[0])
-    return None
-
-
-def _scan_defines(text: str, tokens, env) -> list[LuaTable]:
-    toks_by_off = {off: idx for idx, (_, _, off) in enumerate(tokens)}
-
-    def token_index_at(off: int) -> int:
-        # first token at or after `off`
-        idx = 0
-        for i, (_, _, o) in enumerate(tokens):
-            if o >= off:
-                return i
-        return len(tokens)
-
-    out = []
-    for m in _DEFINE_RE.finditer(text):
-        var, kind = m.group(1), m.group(2)
-        p = _Parser(tokens, token_index_at(m.end() - 1), env)
-        p.expect("(")
-        name = p.parse_value()
-        p.expect(",")
-        cols = p.parse_value()
-        options: dict = {}
-        if p.peek()[1] == ",":
-            p.next()
-            if p.peek()[1] != ")":
-                _, options = p.parse_value()
-        out.append(LuaTable(var=var, name=name, kind=kind,
-                            columns=_parse_columns(cols), options=options))
-    for m in _DEFINE_GENERIC_RE.finditer(text):
-        var = m.group(1)
-        p = _Parser(tokens, token_index_at(m.end() - 1), env)
-        opened = p.peek()[1] == "("
-        if opened:
-            p.next()
-        _, fields = p.parse_table()
-        if opened:
-            p.expect(")")
-        name = fields.get("name")
-        ids = fields.get("ids")
-        # define_table without ids = ids=nil = append-only log table
-        # ('none'), NOT an any-ids table (flex-lua-table.cpp ids parsing)
-        kind = "none"
-        if isinstance(ids, tuple):
-            kind = ids[1].get("type", "any")
-        out.append(LuaTable(
-            var=var, name=name, kind=kind,
-            columns=_parse_columns(fields.get("columns", ([], {}))),
-            options={k: v for k, v in fields.items()
-                     if k not in ("name", "ids", "columns")},
+def _model_of(probe) -> LuaConfigModel:
+    """The tables and expire outputs the probe's chunk defined, named
+    by the variables their handles were bound to."""
+    table_vars = _handle_vars(probe, "__handle__")
+    expire_vars = _handle_vars(probe, "__name__")
+    model = LuaConfigModel()
+    for spec in probe.specs.values():
+        model.tables.append(LuaTable(
+            var=table_vars.get(spec.name, spec.name), name=spec.name,
+            kind=spec.ids_type,
+            columns=[LuaColumn(
+                column=c.name, type=c.type,
+                projection=c.srid if c.type in GEOM_TYPES else None,
+                not_null=c.not_null, create_only=c.create_only,
+                expire=c.expire and ",".join(
+                    expire_vars.get(n, n) for n in c.expire.split(",")),
+            ) for c in spec.columns],
         ))
-    return out
-
-
-_EXPIRE_RE = re.compile(
-    r"([A-Za-z_][\w.]*)\s*=\s*osm2pgsql\.define_expire_output\s*[({]",
-)
-
-
-def _scan_expire_outputs(text: str, tokens, env) -> list:
-    out = []
-    for m in _EXPIRE_RE.finditer(text):
-        var = m.group(1)
-        idx = next(i for i, (_, _, o) in enumerate(tokens) if o >= m.end() - 1)
-        p = _Parser(tokens, idx, env)
-        opened = p.peek()[1] == "("
-        if opened:
-            p.next()
-        _, fields = p.parse_table()
-        out.append(LuaExpireOutput(
-            var=var,
-            maxzoom=int(fields.get("maxzoom", 12)),
-            minzoom=int(fields["minzoom"]) if "minzoom" in fields else None,
-            filename=fields.get("filename"),
-            table=fields.get("table"),
-            schema=fields.get("schema"),
+    for eo in probe.expire_specs:
+        model.expire_outputs.append(LuaExpireOutput(
+            var=expire_vars.get(eo["name"], eo["name"]),
+            maxzoom=eo["maxzoom"], minzoom=eo.get("minzoom"),
+            filename=eo["filename"], table=eo["table"],
         ))
-    return out
+    return model
 
 
-def _scan_delete_keys(text: str, tokens, env) -> tuple[list[str], bool]:
-    m = re.search(r"local\s+(\w+)\s*=\s*\{", text)
-    keys: list[str] = []
-    varname = None
-    cm = re.search(r"osm2pgsql\.make_clean_tags_func\s*\(\s*(\w+)\s*\)", text)
+def _scan_delete_keys(text: str, probe) -> tuple[list[str], bool]:
+    cm = re.search(r"osm2pgsql\.make_clean_tags_func\s*\(\s*([\w.]+)\s*\)", text)
     if cm is None:
         return [], False
-    varname = cm.group(1)
-    dm = re.search(r"local\s+" + re.escape(varname) + r"\s*=\s*\{", text)
-    if dm is None:
-        raise LuaConfigError(f"make_clean_tags_func references unknown list {varname!r}")
-    idx = next(i for i, (_, _, o) in enumerate(tokens) if o >= dm.end() - 1)
-    items, _f = _Parser(tokens, idx, env).parse_table()
-    for it in items:
-        if not isinstance(it, str):
-            raise LuaConfigError("delete_keys entries must be strings")
-        keys.append(it)
-    return keys, True
+    keys = _lookup(probe, cm.group(1))
+    if not isinstance(keys, _LuaValue):
+        raise LuaConfigError(
+            f"make_clean_tags_func references unknown list {cm.group(1)!r}")
+    items = [keys.get(i) for i in range(1, keys.length() + 1)]
+    if len(items) != len(keys.hash) or not all(isinstance(k, str) for k in items):
+        raise LuaConfigError("delete_keys entries must be strings")
+    return items, True
 
 
 def _scan_area_keys(text: str) -> list[str]:
@@ -445,7 +239,8 @@ class _CondParser:
     combined with and/or/not and parentheses."""
 
     def __init__(self, src: str, type_var: str | None):
-        self.toks = [t for t in _tokenize(src)]
+        # the interpreter's lexer: strings arrive unescaped
+        self.toks = tokenize(src)
         self.i = 0
         self.type_var = type_var
 
@@ -527,7 +322,7 @@ class _CondParser:
             k = self.next()[1]
             if self.next()[1] != "]":
                 raise LuaConfigError("unbalanced tag index")
-            return _unquote(k)
+            return k
         raise LuaConfigError(f"expected tag key access, got {v!r}")
 
     def _maybe_compare(self, atom: _Atom) -> _BoolExpr:
@@ -537,7 +332,7 @@ class _CondParser:
             if kind != "string":
                 raise LuaConfigError("comparisons only against string literals")
             atom = _Atom("tag_eq" if op == "==" else "tag_ne",
-                         key=atom.key, value=_unquote(v))
+                         key=atom.key, value=v)
         return _BoolExpr("atom", atom)
 
     def _maybe_compare_wrapped(self, e: _BoolExpr) -> _BoolExpr:
@@ -1010,14 +805,19 @@ def _blank_comments(text: str) -> str:
 
 
 def parse_lua_config(text: str) -> LuaConfigModel:
+    return _parse(text, LuaFlexRuntime(text))
+
+
+def _parse(text: str, probe) -> LuaConfigModel:
+    """The model of a config whose chunk `probe` ran: its definitions
+    from the probe, its helper idioms and callback shapes from the
+    source text."""
+    model = _model_of(probe)
     text = _blank_comments(text)
-    env = _scan_locals(text)
-    tokens = _tokenize(text)
-    model = LuaConfigModel()
-    model.tables = _scan_defines(text, tokens, env)
-    model.expire_outputs = _scan_expire_outputs(text, tokens, env)
-    model.delete_keys, model.clean_guard = _scan_delete_keys(text, tokens, env)
+    model.delete_keys, model.clean_guard = _scan_delete_keys(text, probe)
     model.area_keys = _scan_area_keys(text)
+    env = {name: v for name, v in probe.interp.chunk_scope.vars.items()
+           if isinstance(v, (bool, int, float, str))}
     _match_callbacks(text, model, env)
     return model
 
@@ -1025,30 +825,31 @@ def parse_lua_config(text: str) -> LuaConfigModel:
 def load_lua_config(path_or_text: str) -> tuple["object", LuaConfigModel]:
     """Parse a flex .lua config and compile it into a FlexConfig.
 
-    Returns (flex_config, model).  Use flex_config.run(nodes, ways,
-    relations) exactly like a hand-written Python-DSL config.
+    path_or_text: a path (one line ending in `.lua`, or naming an
+    existing file) or the config's source.  Returns (flex_config,
+    model).  Use flex_config.run(nodes, ways, relations) exactly like a
+    hand-written Python-DSL config.
 
     Configs the declarative subset rejects (procedural callbacks,
     helper functions, mutable state) automatically fall back to the
     Lua-interpreter execution path (plans/lua_flex.LuaFlexAdapter) —
     same (runner, model) contract, so callers don't care which engine
-    compiled the config."""
-    import os
-
-    from osm2pgsql_spark.functions.tags import filter_tags
-    from osm2pgsql_spark.plans.flex import ColumnDef, FlexConfig
-
+    compiled the config.  Both paths share one probe run of the chunk,
+    so both read the definitions the same way."""
     text = path_or_text
-    if "\n" not in path_or_text and os.path.exists(path_or_text):
-        with open(path_or_text) as fh:
+    if "\n" not in text and (text.endswith(".lua") or os.path.exists(text)):
+        with open(text) as fh:
             text = fh.read()
-    if _needs_interpreter(text):
-        return _load_procedural(text)
-    try:
-        model = parse_lua_config(text)
-        return _compile_declarative(text, model)
-    except LuaConfigError:
-        return _load_procedural(text)
+    probe = LuaFlexRuntime(text)
+    if not probe.specs:
+        raise LuaConfigError("config defines no tables")
+    if not _needs_interpreter(text):
+        try:
+            model = _parse(text, probe)
+            return _compile_declarative(model, probe), model
+        except LuaConfigError:
+            pass
+    return LuaFlexAdapter.from_probe(probe), _model_of(probe)
 
 
 def _needs_interpreter(text: str) -> bool:
@@ -1058,47 +859,24 @@ def _needs_interpreter(text: str) -> bool:
     `after_*` callbacks mutate state at file boundaries
     (track-changes.lua uses all three).  Those always run on the
     interpreter; everything else tries the Catalyst fast path first."""
-    import re
-
     stripped = re.sub(r"--\[\[.*?\]\]|--[^\n]*", "", text, flags=re.S)
     return bool(re.search(
         r"osm2pgsql\s*\.\s*(mode\b|process_deleted_|after_(nodes|ways|relations)\b)",
         stripped))
 
 
-def _compile_declarative(text: str, model: LuaConfigModel):
+def _compile_declarative(model: LuaConfigModel, probe):
     from osm2pgsql_spark.functions.tags import filter_tags
-    from osm2pgsql_spark.plans.flex import ColumnDef, FlexConfig
 
-    if not model.tables:
-        raise LuaConfigError("no osm2pgsql.define_*_table calls found")
-
-    cfg = FlexConfig()
-    _KIND_IDS = {"node": "node", "way": "way", "area": "area",
-                 "relation": "relation", "any": "any_object",
-                 "any_object": "any_object", "any_single": "any_single",
-                 "none": "none"}
-    for t in model.tables:
-        cols = []
-        for c in t.columns:
-            srid = c.projection if c.projection is not None else (
-                3857 if c.type in _GEOM_LUA_TYPES else 4326)
-            cols.append(ColumnDef(
-                c.column, _LUA_TYPE_MAP.get(c.type, c.type), srid=srid,
-                not_null=c.not_null, create_only=c.create_only,
-                expire=c.expire,
-            ))
-        cfg.define_table(t.name, ids=_KIND_IDS[t.kind], columns=cols)
-
-    for eo in model.expire_outputs:
-        kw = {"maxzoom": eo.maxzoom}
-        if eo.minzoom is not None:
-            kw["minzoom"] = eo.minzoom
-        cfg.define_expire_output(eo.var, **kw)
-
+    cfg = flex_config_of(probe)
     clean = (filter_tags(F.col("tags"), delete_patterns=model.delete_keys)
              if model.delete_keys else F.col("tags"))
-    by_var = {t.var: t for t in model.tables}
+
+    def table_of(var: str) -> str:
+        handle = _lookup(probe, var)
+        if not (isinstance(handle, _LuaValue) and "__handle__" in handle.hash):
+            raise LuaConfigError(f"insert into unknown table variable {var!r}")
+        return handle.hash["__handle__"]
 
     def tag_col(key: str) -> Column:
         return clean[key]
@@ -1201,7 +979,7 @@ def _compile_declarative(text: str, model: LuaConfigModel):
                           ("way", model.way_inserts),
                           ("relation", model.relation_inserts)):
         for ins in inserts:
-            t = by_var.get(ins.table_var) or model.table_by_var(ins.table_var)
+            table = table_of(ins.table_var)
             when = compile_cond(ins.condition, kind)
             # untagged objects never reach process_node/way/relation in
             # the reference (they go to process_untagged_*), so every
@@ -1245,7 +1023,7 @@ def _compile_declarative(text: str, model: LuaConfigModel):
                 else:
                     values[col] = F.lit(desc[1])
             kw: dict = {}
-            cdefs = {c.name: c for c in cfg.tables[t.name].columns}
+            cdefs = {c.name: c for c in cfg.tables[table].columns}
             plain_base = None
             for col, spec in ins.geom_specs.items():
                 plain = (
@@ -1289,8 +1067,8 @@ def _compile_declarative(text: str, model: LuaConfigModel):
                         kw["geom_transform"] = "line_merge"
             elif kind == "relation":
                 kw.setdefault("relation_geometry", "multipolygon")
-            cfg.insert(t.name, kind, when=when, **kw, **values)
-    return cfg, model
+            cfg.insert(table, kind, when=when, **kw, **values)
+    return cfg
 
 
 def _uses_grab_type(model: LuaConfigModel) -> bool:
@@ -1303,51 +1081,3 @@ def _uses_grab_type(model: LuaConfigModel) -> bool:
         return any(walk(a) for a in e.args)
 
     return any(walk(i.condition) for i in model.relation_inserts)
-
-
-_LUA_TYPE_MAP = {
-    "int2": "int2", "int4": "int4", "int8": "int8",
-    "smallint": "int2", "int": "int4", "integer": "int4", "bigint": "int8",
-    "real": "real", "double": "double", "text": "text", "bool": "boolean",
-    "boolean": "boolean", "json": "json", "jsonb": "jsonb",
-    "hstore": "hstore", "direction": "direction",
-    "timestamp": "timestamp", "timestamptz": "timestamptz",
-    "point": "point", "linestring": "linestring", "polygon": "polygon",
-    "multipoint": "multipoint", "multilinestring": "multilinestring",
-    "multipolygon": "multipolygon", "geometry": "geometry",
-    "geometrycollection": "geometrycollection",
-}
-
-_GEOM_LUA_TYPES = {
-    "point", "linestring", "polygon", "multipoint", "multilinestring",
-    "multipolygon", "geometry", "geometrycollection",
-}
-
-
-def _load_procedural(text: str) -> tuple["object", LuaConfigModel]:
-    """Interpreter fallback: run the config's real Lua through
-    plans/lua_flex.  Builds a synthetic LuaConfigModel so callers that
-    only need table names/kinds (import_tool's ID_SPACES) work
-    unchanged."""
-    from osm2pgsql_spark.plans.lua_flex import LuaFlexAdapter
-
-    adapter = LuaFlexAdapter(text)
-    model = LuaConfigModel()
-    # ids=nil ('none') tables are append-only logs and must stay
-    # distinct from ids={type='any'} tables, which ARE id-tracked
-    # (mapped ids, flex-table.cpp:107-122) and support delete+reinsert
-    # on append
-    _KINDS = {"node": "node", "way": "way", "relation": "relation",
-              "area": "area", "any_object": "any_object",
-              "any_single": "any_single", "none": "none"}
-    for spec in adapter.specs.values():
-        model.tables.append(LuaTable(
-            var=spec.name, name=spec.name,
-            kind=_KINDS.get(spec.ids_type, "any"),
-            columns=[LuaColumn(
-                column=c.name, type=c.type,
-                projection=c.srid, not_null=c.not_null,
-                create_only=c.create_only, expire=c.expire,
-            ) for c in spec.columns],
-        ))
-    return adapter, model

@@ -625,6 +625,7 @@ class LuaFlexRuntime:
 
     def __init__(self, source: str, mode: str = "create", stage: int = 1,
                  region_db: str | None = None):
+        self.source = source
         self.interp = Interpreter()
         self.specs: dict[str, LuaTableSpec] = {}
         self.expire_specs: list[dict] = []
@@ -1647,6 +1648,21 @@ def _phase_mapper(source: str, kind: str, state_blob,
 # -------------------------------------------------------------- adapter
 
 
+def flex_config_of(probe: LuaFlexRuntime) -> FlexConfig:
+    """The tables and expire outputs a config's chunk defined, as a
+    FlexConfig without insert rules: the schema both the declarative
+    compiler (plans/lua_config.py) and the adapter below project into."""
+    fc = FlexConfig()
+    for spec in probe.specs.values():
+        fc.define_table(spec.name, ids=spec.ids_type, columns=spec.columns)
+    for eo in probe.expire_specs:
+        kw = {"maxzoom": eo["maxzoom"]}
+        if "minzoom" in eo:
+            kw["minzoom"] = eo["minzoom"]
+        fc.define_expire_output(eo["name"], **kw)
+    return fc
+
+
 class LuaFlexAdapter:
     """Drives a procedural Lua config end-to-end: phased distributed
     callback execution + typed table projection through the flex DSL.
@@ -1656,19 +1672,28 @@ class LuaFlexAdapter:
 
     def __init__(self, source: str, mode: str = "create",
                  region_db: str | None = None):
+        # driver-side discovery run: table specs, callbacks present
+        self._adopt(LuaFlexRuntime(source, mode=mode, region_db=region_db))
+
+    @classmethod
+    def from_probe(cls, probe: LuaFlexRuntime) -> "LuaFlexAdapter":
+        """The adapter of a config whose chunk `probe` already ran."""
+        adapter = cls.__new__(cls)
+        adapter._adopt(probe)
+        return adapter
+
+    def _adopt(self, probe: LuaFlexRuntime) -> None:
         import os
 
-        self.source = source
-        self.mode = mode
-        self.region_db = region_db
+        self.source = probe.source
+        self.mode = probe.mode
+        self.region_db = probe.region_db
         # per-partition entry count above which an id-keyed state dict
         # spills to distributed per-key rows instead of the driver
         # merge + broadcast (override with the env var; 0 forces the
         # spill path, e.g. for equality tests)
         self._spill_threshold = int(os.environ.get(
             "SPARK_GRAFT_LUA_STATE_SPILL", "200000"))
-        # driver-side discovery run: table specs, callbacks present
-        probe = LuaFlexRuntime(source, mode=mode, region_db=region_db)
         if not probe.specs:
             from osm2pgsql_spark.plans.lua_config import LuaConfigError
 
@@ -1686,7 +1711,7 @@ class LuaFlexAdapter:
         }
         self._select_members = probe.has_select_members()
         self.expire_specs = probe.expire_specs
-        self._flex = self._build_flex(probe)
+        self._flex = flex_config_of(probe)
         # order-dependent scalar state (running max, last-seen id,
         # string accumulator…) cannot merge exactly across partitions;
         # the reference's single sequential VM is exact, so such
@@ -1699,7 +1724,7 @@ class LuaFlexAdapter:
                 scalar_slots.add(name)
                 baselines[name] = v
         self._unsafe_scalars = _scalar_merge_unsafe(
-            source, probe._counters, scalar_slots, baselines)
+            self.source, probe._counters, scalar_slots, baselines)
         seq_env = os.environ.get("SPARK_GRAFT_LUA_EXACT_STATE", "auto")
         self._sequential = seq_env == "1" or (
             seq_env == "auto" and bool(self._unsafe_scalars))
@@ -1711,18 +1736,6 @@ class LuaFlexAdapter:
                 f"({', '.join(sorted(self._unsafe_scalars))}); running "
                 "callback phases on one id-ordered partition for exact "
                 "sequential semantics", stacklevel=2)
-
-    def _build_flex(self, probe: LuaFlexRuntime):
-
-        fc = FlexConfig()
-        for spec in probe.specs.values():
-            fc.define_table(spec.name, ids=spec.ids_type, columns=spec.columns)
-        for eo in probe.expire_specs:
-            kw = {"maxzoom": eo["maxzoom"]}
-            if "minzoom" in eo:
-                kw["minzoom"] = eo["minzoom"]
-            fc.define_expire_output(eo["name"], **kw)
-        return fc
 
     @property
     def tables(self):

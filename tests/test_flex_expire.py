@@ -81,7 +81,8 @@ def test_expire_diff_old_and_new_geometry(spark):
     old_tables = cfg.run(nodes=old_nodes, ways=ways)
     new_tables = cfg.run(nodes=new_nodes, ways=ways)
 
-    touched = spark.createDataFrame([(1,)], "osm_id long")
+    none = spark.createDataFrame([], "id long")
+    touched = (none, spark.createDataFrame([(1,)], "id long"), none)
     tiles = cfg.compute_expire_diff(old_tables, new_tables, touched)
     got = {(r["zoom"], r["x"], r["y"]) for r in tiles["exp"].collect()}
     assert got == {
@@ -89,9 +90,7 @@ def test_expire_diff_old_and_new_geometry(spark):
         (8, 127, 128), (8, 128, 128), (8, 129, 128),
     }
     # no touched ids -> nothing expires (the full-import case)
-    empty = cfg.compute_expire_diff(
-        old_tables, new_tables, spark.createDataFrame([], "osm_id long")
-    )
+    empty = cfg.compute_expire_diff(old_tables, new_tables, (none, none, none))
     assert empty["exp"].count() == 0
 
 
@@ -127,3 +126,54 @@ def test_expire_limit_caps(spark):
     assert dirty_tiles(both, cfg3).count() == 0  # overall cap
     cfg4 = ExpireConfig(maxzoom=2, buffer=0.0, max_tiles_overall=100)
     assert dirty_tiles(both, cfg4).count() >= 3
+
+
+@pytest.fixture(scope="module")
+def area_expire(spark):
+    """An area table wired to an expire output over way 5 (near 9E 50N)
+    and relation 20 (near 20E 10N, stored as -20)."""
+    from osm2pgsql_spark.sources.opl import read_opl
+
+    nodes, ways, rels = read_opl(spark, """n1 x9.0 y50.0
+n2 x9.001 y50.0
+n3 x9.001 y50.001
+n4 x9.0 y50.001
+n5 Tamenity=bench x-40.0 y-30.0
+n6 x20.0 y10.0
+n7 x20.001 y10.0
+n8 x20.001 y10.001
+n9 x20.0 y10.001
+w5 Tname=hall Nn1,n2,n3,n4,n1
+w12 Nn6,n7,n8,n9,n6
+r20 Ttype=multipolygon,name=park Mw12@outer""".splitlines())
+    cfg = FlexConfig()
+    cfg.define_expire_output("exp", maxzoom=10)
+    cfg.define_table("areas", ids="area", columns=[
+        ColumnDef("name", "text"),
+        ColumnDef("geom", "geometry", srid=3857, expire="exp")])
+    named = F.col("tags")["name"].isNotNull()
+    cfg.insert("areas", "way", when=named, way_geometry="polygon",
+               name=F.col("tags")["name"])
+    cfg.insert("areas", "relation", when=named,
+               relation_geometry="multipolygon", name=F.col("tags")["name"])
+    tables = cfg.run(nodes=nodes, ways=ways, relations=rels)
+
+    def dirty(node_ids=(), way_ids=(), rel_ids=()):
+        def ids(values):
+            return spark.createDataFrame([(i,) for i in values], "id long")
+
+        tiles = cfg.compute_expire_diff(
+            tables, tables, (ids(node_ids), ids(way_ids), ids(rel_ids)))
+        return {(r["x"], r["y"]) for r in tiles["exp"].collect()}
+
+    return dirty
+
+
+def test_expire_diff_relation_row_of_area_table(area_expire):
+    # a raw-id filter looks for osm_id 20; the area table stores -20
+    assert area_expire(rel_ids=[20]) == {(568, 483)}
+
+
+def test_expire_diff_node_does_not_expire_way_of_same_id(area_expire):
+    assert area_expire(node_ids=[5]) == set()
+    assert area_expire(way_ids=[5]) == {(537, 347)}

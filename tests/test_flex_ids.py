@@ -301,9 +301,7 @@ def _tool_args(inp, out, **over):
     return argparse.Namespace(**base)
 
 
-def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
-    # the way scheme's touched keys held way ids only, so the refresh
-    # kept the stale (-20, 'rel:old') beside the new row
+def _import_tool():
     import importlib.util
     import os
 
@@ -312,6 +310,13 @@ def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
             os.path.abspath(__file__))), "tools", "import_tool.py"))
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
+    return tool
+
+
+def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
+    # the way scheme's touched keys held way ids only, so the refresh
+    # kept the stale (-20, 'rel:old') beside the new row
+    tool = _import_tool()
     style = tmp_path / "style.py"
     style.write_text(STYLE)
     src = tmp_path / "in.opl"
@@ -324,3 +329,96 @@ def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
                                refresh="incremental"), spark)
     rows = {tuple(r) for r in spark.read.parquet(str(db / "tables" / "t")).collect()}
     assert rows == {(10, "way:w"), (-20, "rel:new")}
+
+
+# -- append expiry by the table's id scheme ------------------------------
+
+AREA_STYLE = '''
+from pyspark.sql import functions as F
+
+from osm2pgsql_spark.plans.flex import ColumnDef, FlexConfig
+
+ID_SPACES = {"areas": "area"}
+
+
+def tables(spark, nodes, ways, rels):
+    cfg = FlexConfig()
+    cfg.define_table("areas", ids="area", columns=[
+        ColumnDef("name", "text"), ColumnDef("geom", "geometry", srid=3857)])
+    named = F.col("tags")["name"].isNotNull()
+    cfg.insert("areas", "way", when=named, way_geometry="polygon",
+               name=F.col("tags")["name"])
+    cfg.insert("areas", "relation", when=named,
+               relation_geometry="multipolygon", name=F.col("tags")["name"])
+    return cfg.run(nodes=nodes, ways=ways, relations=rels)
+'''
+
+# way 5 (a hall near 9E 50N) and relation 20 (a park near 20E 10N,
+# stored as -20); node 5 stands alone at 40W 30S and lands in no table
+AREA_OPL = """n1 x9.0 y50.0
+n2 x9.001 y50.0
+n3 x9.001 y50.001
+n4 x9.0 y50.001
+n5 Tamenity=bench x-40.0 y-30.0
+n6 x20.0 y10.0
+n7 x20.001 y10.0
+n8 x20.001 y10.001
+n9 x20.0 y10.001
+w5 Tname=hall Nn1,n2,n3,n4,n1
+w12 Nn6,n7,n8,n9,n6
+r20 Ttype=multipolygon,name=park Mw12@outer
+"""
+
+EXPIRE_ZOOM = 10
+
+
+def _tile(lon: float, lat: float) -> tuple[int, int, int]:
+    import math
+
+    n = 2 ** EXPIRE_ZOOM
+    y = (1.0 - math.asinh(math.tan(math.radians(lat))) / math.pi) / 2.0 * n
+    return EXPIRE_ZOOM, int((lon + 180.0) / 360.0 * n), int(y)
+
+
+def _append_expiry(tmp_path, spark, osc: str) -> set:
+    tool = _import_tool()
+    style = tmp_path / "style.py"
+    style.write_text(AREA_STYLE)
+    src = tmp_path / "in.opl"
+    src.write_text(AREA_OPL)
+    diff = tmp_path / "diff.osc"
+    diff.write_text(osc)
+    db = tmp_path / "db"
+    out = tmp_path / "dirty.list"
+    tool.cmd_create(_tool_args(src, db, style=str(style)), spark)
+    tool.cmd_append(_tool_args(diff, db, style=str(style), append=True,
+                               expire_tiles=EXPIRE_ZOOM,
+                               expire_output=str(out)), spark)
+    return {tuple(int(v) for v in line.split("/"))
+            for line in out.read_text().split()}
+
+
+def test_append_expires_relation_row_of_area_table(tmp_path, spark):
+    # the raw-id filter looked for osm_id 20, the area table stores -20
+    tiles = _append_expiry(tmp_path, spark, """<?xml version='1.0'?>
+<osmChange version="0.6">
+  <modify><relation id="20" version="2">
+    <member type="way" ref="12" role="outer"/>
+    <tag k="type" v="multipolygon"/><tag k="name" v="garden"/>
+  </relation></modify>
+</osmChange>
+""")
+    assert _tile(20.0005, 10.0005) in tiles
+    assert _tile(9.0005, 50.0005) not in tiles
+
+
+def test_append_node_does_not_expire_way_of_same_id(tmp_path, spark):
+    # the raw-id filter matched node 5 against the row of way 5
+    tiles = _append_expiry(tmp_path, spark, """<?xml version='1.0'?>
+<osmChange version="0.6">
+  <modify><node id="5" version="2" lat="-30.0" lon="-40.0">
+    <tag k="amenity" v="bench"/><tag k="backrest" v="yes"/>
+  </node></modify>
+</osmChange>
+""")
+    assert tiles == set()

@@ -10,12 +10,15 @@ Built from inline Lua and OPL only, so the pins hold without the
 reference's flex-config tree."""
 
 import json
+from collections import Counter
 
 import pytest
 
 from osm2pgsql_spark.functions.geometry import from_wkb
+from osm2pgsql_spark.lua.interp import LuaError
 from osm2pgsql_spark.plans.flex import FlexConfig
 from osm2pgsql_spark.plans.lua_config import load_lua_config, parse_lua_config
+from osm2pgsql_spark.plans.lua_flex import LuaFlexAdapter
 from osm2pgsql_spark.sources.opl import read_opl
 
 OPL = """n1 Tamenity=pub,name=Pub,a=7,b=yes,c=3,d=9000000000,e=x,note=junk x9.0 y50.0
@@ -585,3 +588,129 @@ def test_generic_shaped_config_equals_python_twin(spark):
         assert lua[name].columns == twin[name].columns, name
         assert sorted(map(tuple, lua[name].collect())) == sorted(
             map(tuple, twin[name].collect())), name
+TILES = """
+local tiles = osm2pgsql.define_table({
+    name = 'tiles',
+    ids = { type = 'tile' },
+    columns = {
+        { column = 'x', type = 'int' },
+        { column = 'y', type = 'int' },
+        { column = 'name', type = 'text' },
+    },
+})
+
+function osm2pgsql.process_node(object)
+    tiles:insert({ x = 1, y = 2, name = object.tags.name })
+end
+"""
+
+ANY_SINGLE = """
+local anything = osm2pgsql.define_table({
+    name = 'anything',
+    ids = { type = 'any', id_column = 'osm_id' },
+    columns = { { column = 'name', type = 'text' } },
+})
+
+function osm2pgsql.process_node(object)
+    anything:insert({ name = object.tags.name })
+end
+
+function osm2pgsql.process_way(object)
+    anything:insert({ name = object.tags.name })
+end
+
+function osm2pgsql.process_relation(object)
+    anything:insert({ name = object.tags.name })
+end
+"""
+
+CONFIGS.update(tiles=TILES, any_single=ANY_SINGLE)
+
+
+# -- tile tables and `any` ids without a type column ------------------------
+
+
+def test_tile_table(osm):
+    # the declarative reader had no key scheme for ids type 'tile'
+    assert schema(compiled("tiles")) == {
+        "tiles": ("tile", [("x", "int4", 4326, False, False),
+                           ("y", "int4", 4326, False, False),
+                           ("name", "text", 4326, False, False)])}
+    out = run("tiles", osm)["tiles"]
+    assert (out.columns, rows(out)) == (
+        ["x", "y", "name"], {(1, 2, "Pub"), (1, 2, None)})
+
+
+def test_any_without_type_column_maps_ids(osm):
+    # without a type_column the reference maps ids into one space
+    # (any_single: node id, way -id, relation -id - 10^17); the
+    # declarative reader stored kind letters plus raw ids instead
+    m = parse_lua_config(ANY_SINGLE)
+    assert [(t.name, t.kind) for t in m.tables] == [("anything", "any_single")]
+    assert schema(compiled("any_single"))["anything"][0] == "any_single"
+    out = run("any_single", osm)["anything"]
+    assert (out.columns, rows(out)) == (["osm_id", "name"], {
+        (1, "Pub"), (5, None), (-10, "Road"), (-11, "Hall"),
+        (-20 - 10**17, "Park")})
+
+
+# -- one reader: both paths agree ---------------------------------------------
+
+
+def _bag(df, json_columns: set) -> Counter:
+    """The rows as a multiset; JSON objects compare as values (their key
+    order is not part of a jsonb column's value)."""
+    def cell(name, v):
+        if isinstance(v, (bytes, bytearray)):
+            return bytes(v)
+        if name in json_columns and v is not None:
+            return json.dumps(json.loads(v), sort_keys=True)
+        return v
+
+    return Counter(tuple(cell(n, v) for n, v in zip(df.columns, r))
+                   for r in df.collect())
+
+
+@pytest.mark.parametrize("name", [*sorted(CONFIGS), "generic_shaped"])
+def test_declarative_path_matches_interpreter(osm, name):
+    """The fast path's tables equal the interpreter's on every inline
+    config: same columns, types and rows per table."""
+    src = _generic_shaped() if name == "generic_shaped" else CONFIGS[name]
+    cfg, _model = load_lua_config(src)
+    assert isinstance(cfg, FlexConfig)
+    nodes, ways, rels = osm
+    fast = cfg.run(nodes=nodes, ways=ways, relations=rels)
+    slow = LuaFlexAdapter(src).run(nodes=nodes, ways=ways, relations=rels)
+    assert {n: df.dtypes for n, df in fast.items()} == {
+        n: df.dtypes for n, df in slow.items()}
+    for table in fast:
+        json_columns = {c.name for c in cfg.tables[table].columns
+                        if c.type in ("json", "jsonb")}
+        assert _bag(fast[table], json_columns) == _bag(
+            slow[table], json_columns), table
+
+
+# -- errors -------------------------------------------------------------------
+
+
+def test_missing_lua_path_names_the_file(tmp_path):
+    missing = tmp_path / "styles" / "missing.lua"
+    with pytest.raises(FileNotFoundError, match="missing.lua"):
+        load_lua_config(str(missing))
+
+
+def test_invalid_definition_raises_reference_wording():
+    # the declarative reader took any ids type without a check
+    src = """
+local t = osm2pgsql.define_table({
+    name = 't',
+    ids = { type = 'bogus', id_column = 'id' },
+    columns = { { column = 'name', type = 'text' } },
+})
+
+function osm2pgsql.process_node(object)
+    t:insert({ name = object.tags.name })
+end
+"""
+    with pytest.raises(LuaError, match="Unknown ids type: bogus."):
+        load_lua_config(src)

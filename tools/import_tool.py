@@ -380,28 +380,26 @@ def _write_tables_merge(
 
 
 def expire_tiles_of(
-    tables: dict[str, DataFrame], touched: DataFrame | None, maxzoom: int,
+    tables: dict[str, DataFrame],
+    touched: dict[str, tuple[DataFrame, list[str]]], maxzoom: int,
     buffer: float = 0.1, max_bbox: float = 20000.0,
 ) -> DataFrame | None:
     """Distinct (x, y) dirty tiles at maxzoom across every geometry
     column of the touched rows (old or new side; caller unions both).
-    max_bbox is the --expire-bbox-size hybrid threshold (default
+    touched: per table, the touched keys and their column names
+    (plans/flex.touched_keys); a table without an entry expires every
+    row.  max_bbox is the --expire-bbox-size hybrid threshold (default
     20000 m, options.hpp:99): polygons larger than it expire the
     boundary only (output-flex.cpp:1377-1380, expire-tiles.cpp:116-135);
     0 forces full-area mode."""
     from osm2pgsql_spark.operators.expire import ExpireConfig, dirty_tiles
 
     parts = []
-    for df in tables.values():
+    for name, df in tables.items():
         geom_cols = [c for c, t in df.dtypes if t == "binary"]
         if not geom_cols:
             continue
-        sel = df
-        if touched is not None and "osm_id" in df.columns:
-            sel = df.join(
-                touched.select(F.col(touched.columns[0]).alias("osm_id")).distinct(),
-                "osm_id", "leftsemi",
-            )
+        sel = df.join(*touched[name], "leftsemi") if name in touched else df
         for g in geom_cols:
             parts.append(sel.select(F.col(g).alias("geom")))
     if not parts:
@@ -643,24 +641,6 @@ def cmd_create(args, spark) -> None:
         print(f"table {name}: {n} rows")
 
 
-def _touched_keys(space: str, node_ids: DataFrame, way_ids: DataFrame,
-                  rel_ids: DataFrame) -> tuple[DataFrame, list[str]]:
-    """Touched-object keys for one table's id scheme, in table-column
-    form, plus the join columns: the scheme's own key mapping
-    (plans/flex.key_columns, the reference's flex_table_t::map_id) over
-    the touched ids of every object kind the scheme accepts."""
-    from osm2pgsql_spark.plans.flex import ACCEPTS, key_columns
-
-    if space in ("none", "tile"):
-        raise SystemExit(f"unsupported id space {space!r} for incremental")
-    ids = {"node": node_ids, "way": way_ids, "relation": rel_ids}
-    keys = None
-    for kind in ACCEPTS[space]:
-        part = ids[kind].select(*key_columns(space, kind, F.col("id")))
-        keys = part if keys is None else keys.unionByName(part)
-    return keys.distinct(), keys.columns
-
-
 def _pg_middle_frames(prefix: str, nodes, ways, rels,
                       keep_op: bool = False) -> dict:
     """Slim middle tables for the live database — the reference's
@@ -728,8 +708,7 @@ def resolve_schemas(args) -> tuple[str, str]:
             "" if out == "public" else out)
 
 
-def _pg_apply_append(args, new_side, log_new, id_spaces,
-                     node_ids, way_ids, rel_ids, log_tables,
+def _pg_apply_append(args, new_side, log_new, keys, log_tables,
                      diffs=None) -> None:
     """--append --pg: replay the diff against the live PostgreSQL.
 
@@ -753,12 +732,11 @@ def _pg_apply_append(args, new_side, log_new, id_spaces,
         # materialize once: the touched-closure style pipeline would
         # otherwise re-evaluate for the insert AND the anti-join side
         new_rows = new_rows.localCheckpoint()
-        keys, key_cols = _touched_keys(
-            id_spaces[name], node_ids, way_ids, rel_ids)
+        touched, key_cols = keys[name]
         schema = dict(new_rows.dtypes)
         ins = new_rows.withColumn("op", F.lit("modify"))
         dels = (
-            keys.join(new_rows.select(*key_cols), key_cols, "left_anti")
+            touched.join(new_rows.select(*key_cols), key_cols, "left_anti")
             .select(*[
                 F.col(c) if c in key_cols
                 else F.lit(None).cast(schema[c]).alias(c)
@@ -828,6 +806,7 @@ def _pg_apply_append(args, new_side, log_new, id_spaces,
 
 
 def cmd_append(args, spark) -> None:
+    from osm2pgsql_spark.plans.flex import touched_keys
     from osm2pgsql_spark.streaming.append import affected_ids, apply_diff
     from osm2pgsql_spark.streaming.properties import Properties
 
@@ -881,6 +860,12 @@ def cmd_append(args, spark) -> None:
     node_ids = _ids(sets.changed_nodes).distinct()
     way_ids = _ids(sets.changed_ways).unionByName(_ids(sets.pending_ways)).distinct()
     rel_ids = _ids(sets.changed_rels).unionByName(_ids(sets.pending_rels)).distinct()
+    # every id-tracked table's touched keys under its own id scheme
+    # (relations as -id in area tables, kind-tagged or offset ids in
+    # any tables): the refresh, the output merge, the live-database
+    # replay and the expiry all select a table's touched rows by them
+    keys = {name: touched_keys(space, node_ids, way_ids, rel_ids)
+            for name, space in (id_spaces or {}).items() if space is not None}
 
     if incremental and set(id_spaces) == log_tables:
         # every table is an append-only log: the dedicated log pass
@@ -913,8 +898,7 @@ def cmd_append(args, spark) -> None:
         sub_tables = style_fn(spark, nodes_in, ways_in, rels_in)
 
         new_side = {
-            name: df.join(*_touched_keys(
-                id_spaces[name], node_ids, way_ids, rel_ids), "leftsemi")
+            name: df.join(*keys[name], "leftsemi")
             for name, df in sub_tables.items()
             if name not in log_tables
         }
@@ -931,9 +915,14 @@ def cmd_append(args, spark) -> None:
     # Dirty = old+new tiles of directly-changed and dependency-pending
     # objects (src/output-flex.cpp delete_from_table + insert expiry).
     if args.expire_tiles:
-        touched = node_ids.unionByName(way_ids).unionByName(rel_ids).distinct()
+        # tables without id-tracked keys (styles without ID_SPACES, log
+        # tables) select by the raw touched ids on an osm_id column
+        raw = (node_ids.unionByName(way_ids).unionByName(rel_ids).distinct()
+               .withColumnRenamed("id", "osm_id"), ["osm_id"])
         dirty = []
         for side in (old_tables, new_side):
+            touched = {name: keys.get(name, raw) for name, df in side.items()
+                       if name in keys or "osm_id" in df.columns}
             t = expire_tiles_of(side, touched, args.expire_tiles,
                                 max_bbox=args.expire_bbox_size)
             if t is not None:
@@ -992,16 +981,13 @@ def cmd_append(args, spark) -> None:
     # the middle MERGE below swaps: they all run before it
     if fmt != "merge":
         refreshed = _refreshed_tables(spark, args.out_dir, new_side, log_new,
-                                      log_tables, id_spaces, incremental,
-                                      (node_ids, way_ids, rel_ids))
+                                      log_tables, keys, incremental)
     if getattr(args, "pg", None):
-        _pg_apply_append(args, new_side, log_new, id_spaces,
-                         node_ids, way_ids, rel_ids, log_tables,
+        _pg_apply_append(args, new_side, log_new, keys, log_tables,
                          diffs=(n_diff, w_diff, r_diff))
     if fmt == "merge":
         counts = _merge_tables(spark, args.out_dir, new_side, log_new,
-                               log_tables, id_spaces,
-                               (node_ids, way_ids, rel_ids))
+                               log_tables, keys)
 
     # middle MERGE (partition-pruned on the touched id buckets)
     mids["nodes"].merge_diff(spark, n_diff)
@@ -1033,8 +1019,8 @@ def cmd_append(args, spark) -> None:
 
 
 def _refreshed_tables(spark, out_dir: str, new_side: dict, log_new: dict,
-                      log_tables: set, id_spaces, incremental: bool,
-                      touched: tuple) -> dict[str, DataFrame]:
+                      log_tables: set, keys: dict,
+                      incremental: bool) -> dict[str, DataFrame]:
     """Plain-format append: every output table in full, materialized.
     Id-tracked tables keep their rows of untouched keys and take the
     new rows; log tables keep all rows and take the added ones."""
@@ -1042,8 +1028,7 @@ def _refreshed_tables(spark, out_dir: str, new_side: dict, log_new: dict,
         refreshed = {}
         for name, new_rows in new_side.items():
             old_rows = spark.read.parquet(os.path.join(out_dir, "tables", name))
-            keep = old_rows.join(
-                *_touched_keys(id_spaces[name], *touched), "left_anti")
+            keep = old_rows.join(*keys[name], "left_anti")
             refreshed[name] = keep.unionByName(new_rows).localCheckpoint()
     else:
         refreshed = {n: df.localCheckpoint() for n, df in new_side.items()}
@@ -1065,7 +1050,7 @@ def _refreshed_tables(spark, out_dir: str, new_side: dict, log_new: dict,
 
 
 def _merge_tables(spark, out_dir: str, new_side: dict, log_new: dict,
-                  log_tables: set, id_spaces, touched: tuple) -> dict[str, int]:
+                  log_tables: set, keys: dict) -> dict[str, int]:
     """Merge-format append: each id-tracked table rewrites only the
     buckets holding touched keys; log tables add files.  Returns the
     tables' row counts."""
@@ -1073,11 +1058,11 @@ def _merge_tables(spark, out_dir: str, new_side: dict, log_new: dict,
 
     counts = {}
     for name, new_rows in new_side.items():
-        keys, key_cols = _touched_keys(id_spaces[name], *touched)
+        touched, key_cols = keys[name]
         mt = ParquetMergeTable(
             os.path.join(out_dir, "tables", name), id_col="osm_id")
         buckets = mt.merge_refresh(
-            spark, keys, new_rows.localCheckpoint(), key_cols)
+            spark, touched, new_rows.localCheckpoint(), key_cols)
         counts[name] = mt.read(spark).count()
         print(f"table {name}: merged {len(buckets)} bucket(s)")
     for name in log_tables:
