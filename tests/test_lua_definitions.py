@@ -4,7 +4,8 @@ takes — define_{node,way,area,relation}_table with and without options,
 define_table with each ids scheme, type aliases, projections (literal
 and through a local), not_null / create_only, expire wiring to
 define_expire_output, make_clean_tags_func — pinned by the FlexConfig
-it compiles to, the parse_lua_config model and the rows it writes.
+it compiles to, the parse_lua_config model and the rows it writes, and
+checked against the interpreter path (LuaFlexAdapter) on every config.
 
 Built from inline Lua and OPL only, so the pins hold without the
 reference's flex-config tree."""
@@ -120,6 +121,42 @@ function osm2pgsql.process_relation(object)
     t.by_rel:insert({ name = object.tags.name })
     t.by_area:insert({ name = object.tags.name })
     t.by_any:insert({ name = object.tags.name })
+end
+"""
+
+TILES = """
+local tiles = osm2pgsql.define_table({
+    name = 'tiles',
+    ids = { type = 'tile' },
+    columns = {
+        { column = 'x', type = 'int' },
+        { column = 'y', type = 'int' },
+        { column = 'name', type = 'text' },
+    },
+})
+
+function osm2pgsql.process_node(object)
+    tiles:insert({ x = 1, y = 2, name = object.tags.name })
+end
+"""
+
+ANY_SINGLE = """
+local anything = osm2pgsql.define_table({
+    name = 'anything',
+    ids = { type = 'any', id_column = 'osm_id' },
+    columns = { { column = 'name', type = 'text' } },
+})
+
+function osm2pgsql.process_node(object)
+    anything:insert({ name = object.tags.name })
+end
+
+function osm2pgsql.process_way(object)
+    anything:insert({ name = object.tags.name })
+end
+
+function osm2pgsql.process_relation(object)
+    anything:insert({ name = object.tags.name })
 end
 """
 
@@ -330,6 +367,8 @@ end
 CONFIGS = {
     "kind_tables": KIND_TABLES,
     "id_schemes": ID_SCHEMES,
+    "tiles": TILES,
+    "any_single": ANY_SINGLE,
     "columns": COLUMNS,
     "expire": EXPIRE,
     "clean_tags": CLEAN_TAGS,
@@ -588,43 +627,6 @@ def test_generic_shaped_config_equals_python_twin(spark):
         assert lua[name].columns == twin[name].columns, name
         assert sorted(map(tuple, lua[name].collect())) == sorted(
             map(tuple, twin[name].collect())), name
-TILES = """
-local tiles = osm2pgsql.define_table({
-    name = 'tiles',
-    ids = { type = 'tile' },
-    columns = {
-        { column = 'x', type = 'int' },
-        { column = 'y', type = 'int' },
-        { column = 'name', type = 'text' },
-    },
-})
-
-function osm2pgsql.process_node(object)
-    tiles:insert({ x = 1, y = 2, name = object.tags.name })
-end
-"""
-
-ANY_SINGLE = """
-local anything = osm2pgsql.define_table({
-    name = 'anything',
-    ids = { type = 'any', id_column = 'osm_id' },
-    columns = { { column = 'name', type = 'text' } },
-})
-
-function osm2pgsql.process_node(object)
-    anything:insert({ name = object.tags.name })
-end
-
-function osm2pgsql.process_way(object)
-    anything:insert({ name = object.tags.name })
-end
-
-function osm2pgsql.process_relation(object)
-    anything:insert({ name = object.tags.name })
-end
-"""
-
-CONFIGS.update(tiles=TILES, any_single=ANY_SINGLE)
 
 
 # -- tile tables and `any` ids without a type column ------------------------
