@@ -1672,7 +1672,7 @@ class LuaFlexAdapter:
 
     def __init__(self, source: str, mode: str = "create",
                  region_db: str | None = None):
-        # driver-side discovery run: table specs, callbacks present
+        # one discovery run of the chunk: table specs, callbacks present
         self._adopt(LuaFlexRuntime(source, mode=mode, region_db=region_db))
 
     @classmethod

@@ -377,7 +377,7 @@ CONFIGS = {
 
 @pytest.fixture(scope="module", autouse=True)
 def _session(spark):
-    """Compiled rules are Spark Columns: every test needs the session."""
+    """Compiled rules are Spark Columns, which need an active SparkSession."""
 
 
 @pytest.fixture(scope="module")
