@@ -75,8 +75,40 @@ GEOMETRY_TYPE = T.StructType(
 )
 
 # Diff/change files carry an operation per object
-# (reference: src/input.cpp:190-194, src/osmdata.cpp:55-70).
+# (reference: src/input.cpp:190-194, src/osmdata.cpp:55-70), and its
+# position in the document, so apply_diff can keep the LAST op per id.
 OP_CREATE, OP_MODIFY, OP_DELETE = "create", "modify", "delete"
+CHANGE_FIELDS = [
+    T.StructField("op", T.StringType()),
+    T.StructField("op_seq", T.LongType()),
+]
+
+
+def trio_frames(spark, nodes: list, ways: list, rels: list, change: bool = False):
+    """The (nodes, ways, relations) trio of a driver-side reader.
+
+    Each list holds row tuples in NODE_SCHEMA / WAY_SCHEMA /
+    RELATION_SCHEMA field order: tags a dict, refs a list of ids,
+    members (type, ref, role) tuples, ts an instant (a UTC-aware
+    datetime).  Each list becomes one Arrow table column by column, so
+    the JVM reads Arrow batches instead of unpickling every row, and
+    tags keep the input's key order.  With change=True every row ends
+    in its op, and op_seq is the row's position in the document."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def frame(rows: list, schema: T.StructType):
+        if change:
+            schema = T.StructType(schema.fields + CHANGE_FIELDS)
+        arrow = to_arrow_schema(schema)
+        columns = list(zip(*rows)) or [()] * (len(arrow) - change)
+        arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow)]
+        if change:
+            arrays.append(pa.array(range(len(rows)), pa.int64()))
+        return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+
+    return frame(nodes, NODE_SCHEMA), frame(ways, WAY_SCHEMA), frame(rels, RELATION_SCHEMA)
+
 
 # Hard cap from the reference (src/osmdata.cpp:151-156).
 MAX_RELATION_MEMBERS = 32767

@@ -843,7 +843,7 @@ def load_lua_config(path_or_text: str) -> tuple["object", LuaConfigModel]:
     probe = LuaFlexRuntime(text)
     if not probe.specs:
         raise LuaConfigError("config defines no tables")
-    if not _needs_interpreter(text):
+    if not _needs_interpreter(text) and not _uncompiled_callbacks(text, probe):
         try:
             model = _parse(text, probe)
             return _compile_declarative(model, probe), model
@@ -863,6 +863,20 @@ def _needs_interpreter(text: str) -> bool:
     return bool(re.search(
         r"osm2pgsql\s*\.\s*(mode\b|process_deleted_|after_(nodes|ways|relations)\b)",
         stripped))
+
+
+def _uncompiled_callbacks(text: str, probe) -> bool:
+    """Whether the chunk defined a callback that _match_callbacks does
+    not compile: process_untagged_*, select_relation_members, or a
+    process_<kind> defined in another form than
+    `function osm2pgsql.process_<kind>(object)` (an assigned function
+    expression, say).  The declarative path would write nothing for it."""
+    text = _blank_comments(text)
+    return probe.has_select_members() or any(
+        probe.callback(kind, tagged=False) is not None
+        or (probe.callback(kind, tagged=True) is not None
+            and _find_function_body(text, f"osm2pgsql.process_{kind}") is None)
+        for kind in ("node", "way", "relation"))
 
 
 def _compile_declarative(model: LuaConfigModel, probe):

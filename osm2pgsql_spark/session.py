@@ -6,6 +6,14 @@ relations have 10^4 members, a few TPC-H orderkeys are hot), Arrow
 for pandas-UDF kernels, and a shuffle-partition count sized to the
 local core count (on a real cluster you'd size it to ~2-3x total
 cores or let AQE coalesce).
+
+Spark's generated-code cache is sized to hold one import's classes.
+A warm 108k-object import generates ~110 distinct classes, more than
+the default 100 entries, so the cache evicted them before the next
+import could reuse them and every import Janino-compiled them again.
+At CODEGEN_CACHE_ENTRIES a later import in the same session runs on
+code that is already compiled and JIT-warm.  The setting is static:
+it only takes effect in the builder, before the session exists.
 """
 
 from __future__ import annotations
@@ -13,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "osm2pgsql-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -34,6 +44,7 @@ def get_spark(app_name: str = "osm2pgsql-spark", shuffle_partitions: int | None 
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # the events table carries TIMESTAMP(NANOS) parquet values,
         # which Spark only reads via this legacy flag (as raw int64);
         # sources.testdata converts them back to timestamps.

@@ -29,9 +29,8 @@ from __future__ import annotations
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.model import trio_frames
 
 _NODE, _WAY, _REL = 0x10, 0x11, 0x12
 _BBOX, _TIMESTAMP, _HEADER, _SYNC, _JUMP, _RESET = 0xDB, 0xDC, 0xE0, 0xEE, 0xEF, 0xFF
@@ -158,7 +157,7 @@ def _decode_info(r: _Reader, st: _State):
     st.timestamp += r.zvarint()
     if st.timestamp == 0:
         return version, None, None, None, None
-    ts = datetime.fromtimestamp(st.timestamp, tz=timezone.utc).replace(tzinfo=None)
+    ts = datetime.fromtimestamp(st.timestamp, tz=timezone.utc)
     st.changeset += r.zvarint()
     if r.at_end:
         return version, ts, st.changeset, 0, None
@@ -251,12 +250,7 @@ def read_o5m(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, Data
 
     with open_compressed(path, "rb") as fh:
         data = fh.read()
-    nodes, ways, rels = _parse(data)
-    return (
-        spark.createDataFrame(nodes, NODE_SCHEMA),
-        spark.createDataFrame(ways, WAY_SCHEMA),
-        spark.createDataFrame(rels, RELATION_SCHEMA),
-    )
+    return trio_frames(spark, *_parse(data))
 
 
 def read_o5c(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -264,30 +258,15 @@ def read_o5c(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, Data
     columns (delete where the object body is absent, else modify —
     o5c carries no explicit create marker; modify covers both for the
     delete-before-insert fold)."""
-
-    def schema(base: T.StructType) -> T.StructType:
-        return T.StructType(
-            list(base.fields)
-            + [T.StructField("op", T.StringType()), T.StructField("op_seq", T.LongType())]
-        )
-
     from osm2pgsql_spark.sources.osm_xml import open_compressed
 
     with open_compressed(path, "rb") as fh:
         data = fh.read()
-    nodes, ways, rels = _parse(data)
 
     def mark(rows):
-        return [
-            (*row, "delete" if row[-1] is False else "modify", i)
-            for i, row in enumerate(rows)
-        ]
+        return [(*row, "modify" if row[-1] else "delete") for row in rows]
 
-    return (
-        spark.createDataFrame(mark(nodes), schema(NODE_SCHEMA)),
-        spark.createDataFrame(mark(ways), schema(WAY_SCHEMA)),
-        spark.createDataFrame(mark(rels), schema(RELATION_SCHEMA)),
-    )
+    return trio_frames(spark, *map(mark, _parse(data)), change=True)
 
 
 # ----------------------------------------------------------- encoder

@@ -14,19 +14,21 @@ Format (fields space-separated, one-letter prefixes):
   M <t><id>@<role>,...  relation members
 
 The whole file is parsed on the driver, line by line, into three
-lists that become the (nodes, ways, relations) trio through
-createDataFrame.  Every job that reads the trio unpickles the whole
-extract again in the JVM, so the import tool consumes it once, by the
-middle write, and reads everything after that from the middle.
+lists of row tuples; model.trio_frames turns each into an Arrow table,
+column by column, and hands it to Spark, so the JVM reads Arrow
+batches instead of unpickling rows.  The import tool still consumes
+the trio once, by the middle write, and reads everything after that
+from the middle.
 """
 
 from __future__ import annotations
 
 import re
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
-from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.model import trio_frames
 
 
 # OPL escapes one character as %<hex Unicode codepoint>% (variable
@@ -73,12 +75,8 @@ def parse_opl_line(line: str) -> tuple[str, dict] | None:
         elif c == "i" and rest:
             obj["uid"] = int(rest)
         elif c == "t" and rest:
-            # ISO-8601 Zulu timestamp (OPL t-field)
-            from datetime import datetime, timezone
-
-            obj["ts"] = datetime.strptime(
-                rest, "%Y-%m-%dT%H:%M:%SZ"
-            ).replace(tzinfo=timezone.utc).replace(tzinfo=None)
+            # ISO-8601 Zulu timestamp (OPL t-field), kept as the instant
+            obj["ts"] = datetime.fromisoformat(rest)
         elif c == "u":
             obj["user"] = _unescape(rest)
         elif c == "T" and rest:
@@ -139,11 +137,7 @@ def read_opl(
                     *common,
                 )
             )
-    return (
-        spark.createDataFrame(nodes, NODE_SCHEMA),
-        spark.createDataFrame(ways, WAY_SCHEMA),
-        spark.createDataFrame(rels, RELATION_SCHEMA),
-    )
+    return trio_frames(spark, nodes, ways, rels)
 
 
 def grid_nodes(

@@ -12,18 +12,18 @@ from __future__ import annotations
 
 import gzip
 import xml.etree.ElementTree as ET
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.model import trio_frames
 
 
 def _attrs(el) -> tuple:
     ts = el.get("timestamp")
     return (
         int(el.get("version")) if el.get("version") else None,
-        None if ts is None else ts.replace("T", " ").rstrip("Z"),
+        None if ts is None else datetime.fromisoformat(ts),
         int(el.get("changeset")) if el.get("changeset") else None,
         int(el.get("uid")) if el.get("uid") else None,
         el.get("user"),
@@ -75,24 +75,6 @@ def _parse(root, op: str | None):
     return nodes, ways, rels
 
 
-def _with_ts(df: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _schema(base: T.StructType, with_op: bool) -> T.StructType:
-    fields = [
-        T.StructField("ts", T.StringType()) if f.name == "ts" else f for f in base.fields
-    ]
-    if with_op:
-        fields = fields + [
-            T.StructField("op", T.StringType()),
-            T.StructField("op_seq", T.LongType()),
-        ]
-    return T.StructType(fields)
-
-
 def open_compressed(path: str, mode: str = "rb"):
     """Open a possibly-compressed OSM file.  libosmium resolves the
     compression from the filename suffix (.gz via zlib, .bz2 via
@@ -118,19 +100,16 @@ def read_osm_xml(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Parse a .osm(.gz/.bz2) file into the (nodes, ways, relations) trio."""
-    root = _parse_root(path)
-    nodes, ways, rels = _parse(root, op=None)
-    return (
-        _with_ts(spark.createDataFrame(nodes, _schema(NODE_SCHEMA, False))),
-        _with_ts(spark.createDataFrame(ways, _schema(WAY_SCHEMA, False))),
-        _with_ts(spark.createDataFrame(rels, _schema(RELATION_SCHEMA, False))),
-    )
+    return trio_frames(spark, *_parse(_parse_root(path), op=None))
 
 
 def read_osc_xml(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Parse a .osc(.gz/.bz2) change file; each DataFrame carries an `op` column."""
+    """Parse a .osc(.gz/.bz2) change file; each DataFrame carries `op`
+    and `op_seq` (document order, so apply_diff can keep the LAST op
+    per id: the reference applies ops sequentially,
+    src/osmdata.cpp:55-70)."""
     root = _parse_root(path)
     all_nodes, all_ways, all_rels = [], [], []
     for section in root:
@@ -141,13 +120,4 @@ def read_osc_xml(
         all_nodes.extend(n)
         all_ways.extend(w)
         all_rels.extend(r)
-    # op_seq = document order, so apply_diff can keep the LAST op per
-    # id (the reference applies ops sequentially, src/osmdata.cpp:55-70)
-    all_nodes = [(*row, i) for i, row in enumerate(all_nodes)]
-    all_ways = [(*row, i) for i, row in enumerate(all_ways)]
-    all_rels = [(*row, i) for i, row in enumerate(all_rels)]
-    return (
-        _with_ts(spark.createDataFrame(all_nodes, _schema(NODE_SCHEMA, True))),
-        _with_ts(spark.createDataFrame(all_ways, _schema(WAY_SCHEMA, True))),
-        _with_ts(spark.createDataFrame(all_rels, _schema(RELATION_SCHEMA, True))),
-    )
+    return trio_frames(spark, all_nodes, all_ways, all_rels, change=True)

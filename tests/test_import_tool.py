@@ -309,6 +309,27 @@ def test_create_tables_equal_generic_import_in_memory(tmp_path, spark):
     assert props["current_timestamp"] == "2024-03-01T12:00:00Z"
 
 
+def test_second_import_reuses_generated_code(tmp_path, spark):
+    """The session's generated-code cache holds one import's classes,
+    so a second identical import in the same session compiles almost
+    none (with Spark's default 100 entries it compiles them all again)."""
+    import argparse
+
+    compiled = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    src = tmp_path / "in.opl"
+    src.write_text(OPL_ALL)
+    tool = _load_tool()
+    new_classes = []
+    for run in ("first", "second"):
+        args = argparse.Namespace(input=str(src), out_dir=str(tmp_path / run), bbox=None,
+                                  style=None, pg=None, drop=False)
+        before = compiled.getCount()
+        tool.cmd_create(args, spark)
+        new_classes.append(compiled.getCount() - before)
+    assert new_classes[1] < 10, new_classes
+
+
 def _checkpoints(df) -> set:
     """Ids of the materialized (locally checkpointed) relations a
     DataFrame's plan reads."""

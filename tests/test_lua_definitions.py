@@ -716,3 +716,25 @@ end
 """
     with pytest.raises(LuaError, match="Unknown ids type: bogus."):
         load_lua_config(src)
+
+
+# -- callbacks the declarative parser does not compile -------------------------
+
+_NAMES = "local t = osm2pgsql.define_node_table('p', {{ column = 'name', type = 'text' }})\n"
+
+
+@pytest.mark.parametrize("callback, want", [
+    # an assigned function expression, not `function osm2pgsql.process_node(object)`
+    ("osm2pgsql.process_node = function(o) t:insert{ name = o.tags.name } end",
+     [(1, "a")]),
+    ("function osm2pgsql.process_untagged_node(object)\n"
+     "    t:insert{ name = 'untagged' }\nend",
+     [(2, "untagged")]),
+])
+def test_uncompiled_callbacks_run_on_the_interpreter(spark, callback, want):
+    cfg, _model = load_lua_config(_NAMES + callback + "\n")
+    assert not isinstance(cfg, FlexConfig)
+    nodes, ways, rels = read_opl(spark, ["n1 Tname=a x9 y50", "n2 x9 y50"])
+    out = cfg.run(nodes=nodes, ways=ways, relations=rels)
+    assert {name: sorted(tuple(r) for r in df.collect()) for name, df in out.items()} == {
+        "p": want}

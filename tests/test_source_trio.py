@@ -8,8 +8,13 @@ so a change in how a reader hands its rows to Spark shows up as a
 changed value.  `ts` is compared as epoch seconds (`unix_seconds`),
 which does not depend on any time zone."""
 
+import json
+import os
+import subprocess
+import sys
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm2pgsql_spark.sources.o5m import read_o5c, read_o5m, write_o5m
@@ -255,3 +260,78 @@ def test_o5c_trio(spark, tmp_path):
          [member("w", 10, "outer"), member("n", 1, ""), member("r", 21, "sub")]),
         (21, "delete", 1, [])]
     assert rows(nodes)[0]["ts"] == 1591014896
+
+
+def test_tags_keep_the_input_key_order(spark):
+    """The trio's tags map, and so every jsonb text built from it,
+    lists keys in the input's order."""
+    nodes, _, _ = read_opl(spark, ["n1 Tamenity=cafe,name=School%20%cafe x9 y50"])
+    assert nodes.select(F.to_json("tags")).first()[0] == (
+        '{"amenity":"cafe","name":"School cafe"}')
+    nodes, _, _ = read_opl(spark, ["n1 Tname=School%20%cafe,amenity=cafe x9 y50"])
+    assert nodes.select(F.to_json("tags")).first()[0] == (
+        '{"name":"School cafe","amenity":"cafe"}')
+
+
+# Run in a fresh interpreter per time zone: the readers' epochs, and
+# the current_timestamp property after a create and after an append.
+_TZ_SCRIPT = r"""
+import importlib.util, json, os, sys
+from datetime import datetime
+
+from pyspark.sql import functions as F
+
+from osm2pgsql_spark.session import get_spark
+from osm2pgsql_spark.sources.o5m import read_o5m, write_o5m
+from osm2pgsql_spark.sources.opl import read_opl
+from osm2pgsql_spark.sources.osm_xml import read_osm_xml
+
+repo, work = sys.argv[1], sys.argv[2]
+spark = get_spark("tz-check", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+opl = os.path.join(work, "in.opl")
+with open(opl, "w") as fh:
+    fh.write("n1 v1 t2020-06-01T12:34:56Z Tamenity=cafe x9.0 y50.0\n")
+osm = os.path.join(work, "in.osm")
+with open(osm, "w") as fh:
+    fh.write('<osm version="0.6"><node id="1" version="1" '
+             'timestamp="2020-06-01T12:34:56Z" lat="50" lon="9"/></osm>')
+osc = os.path.join(work, "in.osc")
+with open(osc, "w") as fh:
+    fh.write('<osmChange version="0.6"><modify><node id="1" version="2" '
+             'timestamp="2020-06-02T01:02:03Z" lat="50" lon="9"/></modify></osmChange>')
+o5m = os.path.join(work, "in.o5m")
+write_o5m(o5m, lambda enc: enc.node(1, 50.0, 9.0, version=1,
+                                     ts=datetime(2020, 6, 1, 12, 34, 56)))
+out = {name: trio[0].select(F.unix_seconds("ts")).first()[0] for name, trio in (
+    ("opl", read_opl(spark, opl)), ("osm", read_osm_xml(spark, osm)),
+    ("o5m", read_o5m(spark, o5m)))}
+spec = importlib.util.spec_from_file_location(
+    "import_tool", os.path.join(repo, "tools", "import_tool.py"))
+tool = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(tool)
+db = os.path.join(work, "db")
+for argv, key in (([opl, db], "create"), (["--append", osc, db], "append")):
+    sys.argv = ["import_tool", *argv]
+    tool.main()
+    with open(os.path.join(db, "properties.json")) as fh:
+        out[key] = json.load(fh)["current_timestamp"]
+print("RESULT " + json.dumps(out))
+"""
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_timestamps_are_instants_in_any_zone(tmp_path, tz):
+    """ts holds the instant the file gives, and the current_timestamp
+    property prints it in Zulu, whatever the process's time zone."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _TZ_SCRIPT, repo, str(tmp_path)],
+        capture_output=True, text=True, cwd=repo, timeout=600,
+        env={**os.environ, "TZ": tz, "PYTHONPATH": repo,
+             "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "2")})
+    assert r.returncode == 0, r.stderr[-3000:]
+    result = json.loads(r.stdout.split("RESULT ", 1)[1].splitlines()[0])
+    assert result == {"opl": 1591014896, "osm": 1591014896, "o5m": 1591014896,
+                      "create": "2020-06-01T12:34:56Z",
+                      "append": "2020-06-02T01:02:03Z"}

@@ -49,7 +49,7 @@ os.environ["PYTHONPATH"] = (
     else _REPO
 )
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def read_osm_any(spark, path: str, input_format: str = ""):
@@ -335,8 +335,6 @@ def _middle(out_dir: str, name: str):
 
 
 def _write_tables(tables: dict[str, DataFrame], out_dir: str) -> dict[str, int]:
-    from pyspark.sql import Observation
-
     counts = {}
     for name, df in tables.items():
         path = os.path.join(out_dir, "tables", name)
@@ -359,8 +357,6 @@ def _write_tables_merge(
     plain format lacks: its append rewrites every output table in
     full, O(planet) per minutely diff at scale).  ids=nil log tables
     stay plain parquet; appends only ADD files there."""
-    from pyspark.sql import Observation
-
     from osm2pgsql_spark.streaming.merge_sink import ParquetMergeTable
 
     logs = {n: df for n, df in tables.items() if (id_spaces or {}).get(n) is None}
@@ -416,16 +412,26 @@ def expire_tiles_of(
         F.col("x").cast("int"), F.col("y").cast("int"))
 
 
-def _data_timestamp(frames) -> "datetime.datetime | None":
-    """Newest object timestamp across the input frames (the session
-    runs in UTC, so the naive max is a UTC wall time), in one pass."""
-    stamps = [df.select("ts") for df in frames if "ts" in df.columns]
-    if not stamps:
+def _newest_ts():
+    """Newest object timestamp of a frame as epoch seconds: an instant,
+    whatever the session's or the Python process's time zone."""
+    return F.max(F.unix_seconds("ts")).alias("ts")
+
+
+def _zulu(seconds: int | None) -> str | None:
+    """Epoch seconds as the properties' Zulu text."""
+    if seconds is None:
         return None
-    allts = stamps[0]
-    for df in stamps[1:]:
-        allts = allts.unionByName(df)
-    return allts.agg(F.max("ts")).first()[0]
+    return datetime.datetime.fromtimestamp(
+        seconds, datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def _data_timestamp(frames) -> str | None:
+    """Newest object timestamp across the input frames, in one pass."""
+    allts = frames[0].select("ts")
+    for df in frames[1:]:
+        allts = allts.unionByName(df.select("ts"))
+    return _zulu(allts.agg(_newest_ts()).first()[0])
 
 
 _BBOX_NUM_RE = re.compile(
@@ -510,12 +516,16 @@ def cmd_create(args, spark) -> None:
     # fetches node locations through its middle: the parsed frames are
     # consumed once, here, and every later job scans parquet instead of
     # re-deriving them from the parse
+    # the newest object timestamp rides on the write jobs, like the
+    # row counts of _write_tables
+    newest = []
     for name, df in (("nodes", nodes), ("ways", ways), ("rels", rels)):
-        _middle(args.out_dir, name).write_full(df)
+        obs = Observation(f"ts:{name}")
+        _middle(args.out_dir, name).write_full(df.observe(obs, _newest_ts()))
+        newest.append(obs.get["ts"])
+    data_ts = _zulu(max((s for s in newest if s is not None), default=None))
     nodes, ways, rels = (
         _middle(args.out_dir, name).read(spark) for name in ("nodes", "ways", "rels"))
-    # newest object timestamp, taken before --drop removes the middle
-    data_ts = _data_timestamp((nodes, ways, rels))
     out_backend = getattr(args, "output", "flex")
     if out_backend == "null":
         # reference output-null.cpp: parse the input, keep the middle
@@ -616,7 +626,7 @@ def cmd_create(args, spark) -> None:
     # input — osm2pgsql-replication init reads both (properties.cpp,
     # scripts/osm2pgsql-replication:167-193)
     if data_ts is not None:
-        props.set("current_timestamp", data_ts.strftime("%Y-%m-%dT%H:%M:%SZ"))
+        props.set("current_timestamp", data_ts)
     if args.input.endswith((".pbf", ".osm.pbf")):
         from osm2pgsql_spark.streaming.replication import (
             osm_date, replication_header_from_pbf)
@@ -998,10 +1008,9 @@ def cmd_append(args, spark) -> None:
     props.set(
         "append_timestamp", datetime.datetime.utcnow().isoformat() + "Z"
     )
-    diff_ts = _data_timestamp((n_diff, w_diff, r_diff))
-    if diff_ts is not None:
+    new = _data_timestamp((n_diff, w_diff, r_diff))
+    if new is not None:
         cur = props.get("current_timestamp")
-        new = diff_ts.strftime("%Y-%m-%dT%H:%M:%SZ")
         if cur is None or new > cur:
             props.set("current_timestamp", new)
     props.save()
