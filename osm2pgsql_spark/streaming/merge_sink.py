@@ -19,6 +19,15 @@ per diff is proportional to touched data, not table size, which is
 the property that matters at 100 TB.  (What Delta would add on top is
 snapshot isolation / atomic commit; the physical plan — partition
 prune -> anti-join -> union -> partition overwrite — is the same.)
+
+On disk a table is ``<path>/__bucket=<b>/*.parquet`` plus a
+``_schema.json`` sidecar.  Every write rebalances its rows by bucket
+first, so a bucket is one task's file, not one file per input task —
+like the reference's one COPY stream per middle table
+(src/middle-pgsql.cpp:1040-1044).  REBALANCE, not a plain repartition,
+because AQE also splits a bucket above its advisory partition size over
+several tasks, so write parallelism at scale is not capped at the
+bucket count.
 """
 
 from __future__ import annotations
@@ -37,7 +46,9 @@ _BUCKET = "__bucket"
 
 
 class ParquetMergeTable:
-    """A keyed snapshot table with MERGE-style diff application."""
+    """A keyed snapshot table with MERGE-style diff application: one
+    parquet file per hash bucket of ``id_col`` (more only for a bucket
+    above AQE's advisory partition size)."""
 
     def __init__(self, path: str, id_col: str = "id", num_buckets: int = 16) -> None:
         self.path = path
@@ -49,11 +60,14 @@ class ParquetMergeTable:
             _BUCKET, F.pmod(F.xxhash64(F.col(self.id_col)), F.lit(self.num_buckets))
         )
 
+    def _write_buckets(self, df: DataFrame, path: str) -> None:
+        self._bucketed(df).hint("rebalance", _BUCKET).write.partitionBy(
+            _BUCKET
+        ).mode("overwrite").parquet(path)
+
     def write_full(self, df: DataFrame) -> None:
         """Initial import: full overwrite, hash-partitioned by id."""
-        self._bucketed(df).write.partitionBy(_BUCKET).mode("overwrite").parquet(
-            self.path
-        )
+        self._write_buckets(df, self.path)
         # schema sidecar so a fully-emptied table stays readable
         with open(os.path.join(self.path, "_schema.json"), "w", encoding="utf-8") as fh:
             fh.write(df.schema.json())
@@ -80,51 +94,11 @@ class ParquetMergeTable:
         partition overwrite on the write side).  Returns the list of
         rewritten bucket ids (useful for tests/metrics).
         """
-        self.recover()  # finish any interrupted prior swap first
-        diff_b = self._bucketed(diff)
-        touched = sorted(
-            r[_BUCKET] for r in diff_b.select(_BUCKET).distinct().collect()
+        return self._merge_buckets(
+            spark,
+            diff.select(self.id_col),
+            lambda base: apply_diff(base, diff, self.id_col, order_col),
         )
-        if not touched:
-            return []
-        if glob.glob(os.path.join(self.path, f"{_BUCKET}=*", "*.parquet")):
-            base = (
-                spark.read.parquet(self.path)
-                .where(F.col(_BUCKET).isin([int(b) for b in touched]))
-                .drop(_BUCKET)
-            )
-        else:
-            # fully-emptied table: only _schema.json remains, so direct
-            # parquet reading would die on schema inference
-            base = self.read(spark)
-        merged = apply_diff(base, diff, id_col=self.id_col, order_col=order_col)
-        out = self._bucketed(merged)
-
-        # a path cannot be safely overwritten while it is also the
-        # scan source; stage the rewritten partitions in a temp dir,
-        # then swap the touched partition directories.  The swap is
-        # NOT atomic (plain filesystem), so it is journaled: a marker
-        # file written before the first move lists the touched buckets
-        # and is removed only after the staging dir is gone.  The
-        # per-bucket move is idempotent (rm dst; move src if present),
-        # so recover() can re-run the loop after a crash at any point.
-        tmp = self.path + ".merge-tmp"
-        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(tmp)
-        # `staged` (buckets with rows in tmp) recorded in the journal
-        # disambiguates recovery: a staged bucket whose src is gone was
-        # already moved (keep dst); an unstaged bucket was emptied by
-        # the merge (dst must be removed) — without it the two states
-        # are indistinguishable after a crash.
-        staged = [
-            int(b)
-            for b in touched
-            if os.path.isdir(os.path.join(tmp, f"{_BUCKET}={b}"))
-        ]
-        self._write_marker(
-            {"touched": [int(b) for b in touched], "staged": staged}
-        )
-        self._swap_from_tmp(tmp, touched, set(staged))
-        return [int(b) for b in touched]
 
     def merge_refresh(
         self,
@@ -144,40 +118,60 @@ class ParquetMergeTable:
         be one of key_cols; pruning covers both sides because every
         inserted row's id is also a touched id.  Same journaled
         staged-swap commit as merge_diff."""
-        self.recover()
         key_cols = key_cols or [self.id_col]
         keys = touched_keys.select(*key_cols).unionByName(
             new_rows.select(*key_cols)
         ).distinct()
+        return self._merge_buckets(
+            spark,
+            keys,
+            lambda base: base.join(keys, key_cols, "left_anti")
+            .unionByName(new_rows),
+        )
+
+    def _merge_buckets(self, spark: SparkSession, ids: DataFrame, merge) -> list[int]:
+        """Rewrite the buckets of the ids in `ids` as `merge(base)`,
+        where base is the current rows of those buckets, and commit
+        them by the journaled staged swap.  Returns the bucket ids."""
+        self.recover()  # finish any interrupted prior swap first
         touched = sorted(
-            r[_BUCKET]
-            for r in self._bucketed(keys).select(_BUCKET).distinct().collect()
+            int(r[_BUCKET])
+            for r in self._bucketed(ids).select(_BUCKET).distinct().collect()
         )
         if not touched:
             return []
         if glob.glob(os.path.join(self.path, f"{_BUCKET}=*", "*.parquet")):
             base = (
                 spark.read.parquet(self.path)
-                .where(F.col(_BUCKET).isin([int(b) for b in touched]))
+                .where(F.col(_BUCKET).isin(touched))
                 .drop(_BUCKET)
             )
         else:
+            # fully-emptied table: only _schema.json remains, so direct
+            # parquet reading would die on schema inference
             base = self.read(spark)
-        keep = base.join(keys, key_cols, "left_anti")
-        out = self._bucketed(keep.unionByName(new_rows))
 
+        # a path cannot be safely overwritten while it is also the
+        # scan source; stage the rewritten partitions in a temp dir,
+        # then swap the touched partition directories.  The swap is
+        # NOT atomic (plain filesystem), so it is journaled: a marker
+        # file written before the first move lists the touched buckets
+        # and is removed only after the staging dir is gone.  The
+        # per-bucket move is idempotent (rm dst; move src if present),
+        # so recover() can re-run the loop after a crash at any point.
         tmp = self.path + ".merge-tmp"
-        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(tmp)
+        self._write_buckets(merge(base), tmp)
+        # `staged` (buckets with rows in tmp) recorded in the journal
+        # disambiguates recovery: a staged bucket whose src is gone was
+        # already moved (keep dst); an unstaged bucket was emptied by
+        # the merge (dst must be removed) — without it the two states
+        # are indistinguishable after a crash.
         staged = [
-            int(b)
-            for b in touched
-            if os.path.isdir(os.path.join(tmp, f"{_BUCKET}={b}"))
+            b for b in touched if os.path.isdir(os.path.join(tmp, f"{_BUCKET}={b}"))
         ]
-        self._write_marker(
-            {"touched": [int(b) for b in touched], "staged": staged}
-        )
+        self._write_marker({"touched": touched, "staged": staged})
         self._swap_from_tmp(tmp, touched, set(staged))
-        return [int(b) for b in touched]
+        return touched
 
     def _marker_path(self) -> str:
         return os.path.join(self.path, "_merge_inprogress.json")

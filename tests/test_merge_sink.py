@@ -401,3 +401,81 @@ def test_kill_after_marker_before_swap(spark, tmp_path):
         r.id: (r.lon + 1.0, r.lat) for r in base.collect()
     }
     assert got == want_new  # swap completed from the journal
+
+
+def _files_per_bucket(path):
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(path, "__bucket=*"))
+    }
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_write_full_one_file_per_bucket(spark, tmp_path):
+    """Four input partitions would put four files in every bucket if
+    each input task wrote its own; the table gets one per bucket."""
+    path = str(tmp_path / "snap")
+    t = ParquetMergeTable(path, num_buckets=8)
+    base = _nodes(spark).repartition(4)
+    t.write_full(base)
+    files = _files_per_bucket(path)
+    assert len(files) == 8 and set(files.values()) == {1}, files
+    assert _rows(t.read(spark)) == _rows(base)
+
+
+def test_merge_diff_one_file_per_bucket(spark, tmp_path):
+    path = str(tmp_path / "snap")
+    t = ParquetMergeTable(path, num_buckets=8)
+    base = _nodes(spark)
+    t.write_full(base)
+    diff = (
+        base.select("id", (F.col("lon") + 1.0).alias("lon"), "lat")
+        .withColumn("op", F.lit("modify"))
+        .repartition(4)
+    )
+    assert t.merge_diff(spark, diff) == list(range(8))
+    files = _files_per_bucket(path)
+    assert len(files) == 8 and set(files.values()) == {1}, files
+    assert _rows(t.read(spark)) == _rows(diff.drop("op"))
+
+
+def test_merge_refresh_one_file_per_bucket(spark, tmp_path):
+    path = str(tmp_path / "out")
+    t = ParquetMergeTable(path, id_col="osm_id", num_buckets=8)
+    base = _parts(spark)
+    t.write_full(base)
+    touched = base.select("osm_id").where(F.col("osm_id") % 2 == 0)
+    new_rows = (
+        base.join(touched, "osm_id")
+        .select("osm_id", "part", (F.col("v") + 1.0).alias("v"))
+        .repartition(4)
+    )
+    t.merge_refresh(spark, touched, new_rows, ["osm_id"])
+    files = _files_per_bucket(path)
+    assert len(files) == 8 and set(files.values()) == {1}, files
+    want = base.join(touched, "osm_id", "left_anti").unionByName(new_rows)
+    assert _rows(t.read(spark).select(*want.columns)) == _rows(want)
+
+
+def test_bucket_above_advisory_size_is_split(spark, tmp_path):
+    """The rebalance does not cap write parallelism at the bucket
+    count: a bucket larger than AQE's advisory partition size is
+    written by several tasks, so as several files."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        path = str(tmp_path / "big")
+        t = ParquetMergeTable(path, num_buckets=1)
+        base = spark.range(0, 100_000).repartition(4)
+        t.write_full(base)
+    finally:
+        spark.conf.set(key, old)
+    files = _files_per_bucket(path)
+    assert list(files) == ["__bucket=0"] and files["__bucket=0"] > 1, files
+    got = t.read(spark)
+    assert got.count() == 100_000
+    assert got.exceptAll(base).count() == 0
