@@ -36,6 +36,26 @@ from osm2pgsql_spark.operators.reverse_deps import (
 )
 
 
+def last_ops(
+    diff: DataFrame, id_col: str = "id", order_col: str | None = None
+) -> DataFrame:
+    """One row per id: the LAST op in document order (the reference
+    applies diff ops sequentially, src/osmdata.cpp:55-70), ordered by
+    order_col (defaults to the `op_seq` column read_osc_xml emits),
+    which is dropped.  Without any order column the diff is assumed
+    single-op-per-id (osmium-simplified) and returned as-is."""
+    if order_col is None and "op_seq" in diff.columns:
+        order_col = "op_seq"
+    if order_col is None:
+        return diff
+    w = Window.partitionBy(id_col).orderBy(F.desc(order_col))
+    return (
+        diff.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn", order_col)
+    )
+
+
 def apply_diff(
     base: DataFrame,
     diff: DataFrame,
@@ -48,21 +68,10 @@ def apply_diff(
     {create, modify, delete}.  Semantics (src/osmdata.cpp:55-70):
     delete removes the object, modify replaces it (delete+add),
     create adds it.  Duplicate ids within one diff keep the LAST op in
-    document order: the diff is first reduced to one row per id via
-    order_col (defaults to the `op_seq` column read_osc_xml emits), so
-    create-then-modify yields one snapshot row and modify-then-delete
-    stays deleted.  Without any order column the diff is assumed
-    single-op-per-id (osmium-simplified) and folded as-is.
+    document order (last_ops), so create-then-modify yields one
+    snapshot row and modify-then-delete stays deleted.
     """
-    if order_col is None and "op_seq" in diff.columns:
-        order_col = "op_seq"
-    if order_col is not None:
-        w = Window.partitionBy(id_col).orderBy(F.desc(order_col))
-        diff = (
-            diff.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", order_col)
-        )
+    diff = last_ops(diff, id_col, order_col)
     touched = diff.select(F.col(id_col)).distinct()
     survivors = base.join(touched, id_col, "left_anti")
     additions = diff.where(F.col("op") != "delete").drop("op")
@@ -101,13 +110,10 @@ def affected_ids(
     (src/osmdata.cpp:60-69) — conflating the two loses modify rows
     whose upstream metadata mislabels them version=1."""
 
-    def ids_of(diff: DataFrame | None, skip_v1: bool = False) -> DataFrame | None:
+    def ids_of(diff: DataFrame | None) -> DataFrame | None:
         if diff is None:
             return None
-        d = diff
-        if skip_v1 and "version" in diff.columns:
-            d = d.where(F.coalesce(F.col("version"), F.lit(2)) > 1)
-        return d.select(F.col("id")).distinct()
+        return diff.select(F.col("id")).distinct()
 
     sess = spark or ways.sparkSession
 

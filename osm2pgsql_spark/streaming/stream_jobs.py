@@ -1,71 +1,17 @@
-"""Structured Streaming jobs: continuous diff replication + windowed
-event aggregation.
+"""Structured Streaming job: windowed event aggregation.
 
-The reference's replication driver (scripts/osm2pgsql-replication,
-~1000 LoC python) polls a diff server, downloads .osc files and
-invokes append mode per batch; state (sequence number) lives in the
-osm2pgsql_properties table (/root/reference/src/properties.cpp).
-
-Spark-first: a file-source stream over a diff directory +
-foreachBatch applying the same batch-incremental logic as
-streaming.append; offsets/state live in the checkpoint dir (replacing
-the properties-table sequence tracking).  The windowed aggregation
-shows the watermark/late-data shape the reference lacks entirely
-(SURVEY §2.10: it has no event-time streaming).
+Diff replication is not a stream here: tools/replication.py applies
+each downloaded diff with the import tool's append, as the reference's
+scripts/osm2pgsql-replication runs `osm2pgsql --append` per batch.
+The windowed aggregation shows the watermark/late-data shape the
+reference lacks entirely (SURVEY §2.10: it has no event-time
+streaming).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from osm2pgsql_spark.model import NODE_SCHEMA
-from osm2pgsql_spark.streaming.append import apply_diff
-
-DIFF_NODE_SCHEMA = T.StructType(
-    list(NODE_SCHEMA.fields) + [T.StructField("op", T.StringType())]
-)
-
-
-def stream_node_diffs(
-    spark: SparkSession,
-    diff_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    initial: DataFrame,
-    on_batch: Callable[[DataFrame, int], None] | None = None,
-):
-    """Continuously fold node diff files (parquet in diff_dir) into a
-    snapshot at state_path.
-
-    Each micro-batch runs apply_diff against the current snapshot and
-    atomically replaces it — the streaming analog of the reference's
-    per-diff append run.  Returns the StreamingQuery."""
-    initial.write.mode("overwrite").parquet(state_path)
-
-    diffs = spark.readStream.schema(DIFF_NODE_SCHEMA).parquet(diff_dir)
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        base = batch.sparkSession.read.parquet(state_path)
-        updated = apply_diff(base, batch)
-        # write-then-swap (parquet has no MERGE; a Delta/Iceberg sink
-        # would make this a real MERGE INTO)
-        tmp = state_path + f".b{batch_id}"
-        updated.write.mode("overwrite").parquet(tmp)
-        final = batch.sparkSession.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(state_path)
-        if on_batch is not None:
-            on_batch(final, batch_id)
-
-    return (
-        diffs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def windowed_event_counts(

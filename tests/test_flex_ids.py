@@ -294,7 +294,7 @@ def _tool_args(inp, out, **over):
         input=str(inp), out_dir=str(out), append=False, drop=False,
         style=None, output="flex", region_db=None, bbox=None, pg=None,
         input_reader="", expire_tiles=0, expire_output=None,
-        expire_bbox_size=20000.0, refresh="auto", tables_format="plain",
+        expire_bbox_size=20000.0, tables_format="plain",
         prefix="planet_osm", schema="public", middle_schema="",
         output_pgsql_schema="", latlong=False, merc=False, proj=None)
     base.update(over)
@@ -325,8 +325,7 @@ def test_append_refresh_replaces_relation_row_in_way_table(tmp_path, spark):
     osc.write_text(RENAME_OSC)
     db = tmp_path / "db"
     tool.cmd_create(_tool_args(src, db, style=str(style)), spark)
-    tool.cmd_append(_tool_args(osc, db, style=str(style), append=True,
-                               refresh="incremental"), spark)
+    tool.cmd_append(_tool_args(osc, db, style=str(style), append=True), spark)
     rows = {tuple(r) for r in spark.read.parquet(str(db / "tables" / "t")).collect()}
     assert rows == {(10, "way:w"), (-20, "rel:new")}
 

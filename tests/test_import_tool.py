@@ -30,6 +30,17 @@ OSC = """<?xml version='1.0'?>
 </osmChange>
 """
 
+# OPL after OSC
+POST_OPL = """n1 Tamenity=pub,name=A x9.0 y50.0
+n2 x9.5 y50.5
+n3 x9.001 y50.001
+n4 x9.0 y50.001
+n10 Thighway=bus_stop x9.2 y50.2
+n20 v1 x9.3 y50.3
+w100 Thighway=residential,name=Main Nn1,n2
+w101 Tnatural=water Nn1,n2,n3,n4,n1
+"""
+
 
 def _run(args):
     return subprocess.run(
@@ -123,28 +134,44 @@ def test_append_rejects_incompatible_style(imported, tmp_path):
     assert "incompatible" in (r.stderr + r.stdout)
 
 
+def test_append_rejects_other_output(tmp_path, spark):
+    """The output backend is recorded at create and checked on append
+    (reference properties table, src/osm2pgsql.cpp:300-309): a flex
+    append to a -O null database is refused, naming `output`."""
+    import argparse
+
+    src = tmp_path / "in.opl"
+    src.write_text(OPL)
+    out = tmp_path / "db"
+    _load_tool().cmd_create(argparse.Namespace(
+        input=str(src), out_dir=str(out), bbox=None, style=None, pg=None,
+        drop=False, output="null"), spark)
+    osc = tmp_path / "c.osc"
+    osc.write_text(OSC)
+    r = _run([str(osc), str(out), "--append"])
+    assert r.returncode != 0
+    assert "incompatible" in r.stderr and "output" in r.stderr, r.stderr[-2000:]
+
+
 @pytest.mark.slow
 def test_append_incremental_equals_full(tmp_path, spark):
-    """--refresh incremental (touched rows only) must produce exactly
-    the tables --refresh full re-derives."""
+    """An incremental append (touched rows only) must produce exactly
+    the tables a fresh import of the post-diff state derives."""
     src = tmp_path / "in.opl"
     src.write_text(OPL)
     osc = tmp_path / "c.osc"
     osc.write_text(OSC)
-    dbs = {}
-    for mode in ("full", "incremental"):
-        out = tmp_path / f"db_{mode}"
-        assert _run([str(src), str(out)]).returncode == 0
-        r = _run([str(osc), str(out), "--append", "--refresh", mode])
-        assert r.returncode == 0, r.stderr[-2000:]
-        dbs[mode] = out
-    for name in ("points", "lines", "polygons", "routes", "boundaries"):
-        full = spark.read.parquet(str(dbs["full"] / "tables" / name))
-        inc = spark.read.parquet(str(dbs["incremental"] / "tables" / name))
-        assert sorted(full.columns) == sorted(inc.columns)
-        a = {tuple(str(v) for v in row) for row in full.collect()}
-        b = {tuple(str(v) for v in row) for row in inc.collect()}
-        assert a == b, name
+    post = tmp_path / "post.opl"
+    post.write_text(POST_OPL)
+    out, fresh = tmp_path / "db", tmp_path / "fresh"
+    assert _run([str(src), str(out)]).returncode == 0
+    r = _run([str(osc), str(out), "--append"])
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert _run([str(post), str(fresh)]).returncode == 0
+    for name in GENERIC_TABLES:
+        got = spark.read.parquet(str(out / "tables" / name))
+        want = spark.read.parquet(str(fresh / "tables" / name))
+        assert _rows(got) == _rows(want), name
 
 
 @pytest.mark.slow
@@ -152,30 +179,32 @@ def test_append_reference_multipolygon_diff(tmp_path, spark):
     """The reference's multipolygon diff through the CLI: a way whose
     <modify> is (mis)labelled version=1 must still be recomputed
     (regression: the v1-create propagation skip used to swallow it),
-    deletes must land, and incremental must equal full refresh."""
+    deletes must land, and the appended tables must equal the style
+    run over the diff-folded frames."""
+    from examples.generic_import import generic_import
+    from osm2pgsql_spark.sources.osm_xml import read_osc_xml, read_osm_xml
+    from osm2pgsql_spark.streaming.append import apply_diff
+
     base = "/root/reference/tests/data/test_multipolygon.osm"
     diff = "/root/reference/tests/data/test_multipolygon_diff.osc"
-    dbs = {}
-    for mode in ("full", "incremental"):
-        out = tmp_path / f"db_{mode}"
-        assert _run([base, str(out)]).returncode == 0
-        r = _run([diff, str(out), "--append", "--refresh", mode])
-        assert r.returncode == 0, r.stderr[-2000:]
-        dbs[mode] = out
+    out = tmp_path / "db"
+    assert _run([base, str(out)]).returncode == 0
+    r = _run([diff, str(out), "--append"])
+    assert r.returncode == 0, r.stderr[-2000:]
 
     lines = {r["osm_id"] for r in
-             spark.read.parquet(str(dbs["incremental"] / "tables" / "lines")).collect()}
+             spark.read.parquet(str(out / "tables" / "lines")).collect()}
     polys = {r["osm_id"] for r in
-             spark.read.parquet(str(dbs["incremental"] / "tables" / "polygons")).collect()}
+             spark.read.parquet(str(out / "tables" / "polygons")).collect()}
     assert 15 in lines and 15 not in polys  # closed->open way switched tables
     assert 97 not in lines | polys and 104 not in lines | polys  # deletes
 
-    for name in ("points", "lines", "polygons", "routes", "boundaries"):
-        full = spark.read.parquet(str(dbs["full"] / "tables" / name))
-        inc = spark.read.parquet(str(dbs["incremental"] / "tables" / name))
-        a = {tuple(str(v) for v in row) for row in full.collect()}
-        b = {tuple(str(v) for v in row) for row in inc.collect()}
-        assert a == b, name
+    folded = [apply_diff(b, d) for b, d in
+              zip(read_osm_xml(spark, base), read_osc_xml(spark, diff))]
+    want = generic_import(spark, *folded)
+    for name in GENERIC_TABLES:
+        got = spark.read.parquet(str(out / "tables" / name))
+        assert _rows(got) == _rows(want[name]), name
 
 
 def test_create_bbox_complete_ways(tmp_path, spark):
@@ -276,9 +305,9 @@ def _rows(df):
     """A table as a sorted multiset of rows, columns in name order."""
     cols = sorted(df.columns)
     return sorted(
-        tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
-        for row in df.select(cols).collect()
-    )
+        (tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+         for row in df.select(cols).collect()),
+        key=repr)
 
 
 def test_create_tables_equal_generic_import_in_memory(tmp_path, spark):

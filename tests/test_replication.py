@@ -3,15 +3,18 @@
 core of scripts/osm2pgsql-replication: sequence->URL path math, state
 file parsing, PBF-header state discovery, timestamp->sequence search,
 --max-diff-size batching, and the end-to-end update loop against a
-file:// server tree."""
+file:// server tree, appending to an import_tool database."""
 
+import argparse
 import datetime as dt
 import gzip
+import importlib.util
 import os
 import subprocess
 import sys
 
 import pytest
+from test_import_tool import GENERIC_TABLES, _rows
 
 from osm2pgsql_spark.streaming.replication import (
     ReplicationServer,
@@ -31,6 +34,26 @@ PBF = "/root/reference/tests/data/liechtenstein-2013-08-03.osm.pbf"
 
 def utc(*a):
     return dt.datetime(*a, tzinfo=dt.timezone.utc)
+
+
+def _tool(name):
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(REPO, "tools", f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _import(spark, tmp_path, opl, name):
+    """An import_tool database of the OPL text, made in-process."""
+    tool = _tool("import_tool")
+    src = tmp_path / f"{name}.opl"
+    src.write_text(opl)
+    db = str(tmp_path / name)
+    tool.cmd_create(argparse.Namespace(
+        input=str(src), out_dir=db, bbox=None, style=None, pg=None,
+        drop=False), spark)
+    return db
 
 
 class TestPathMath:
@@ -163,7 +186,8 @@ OSC1 = """<?xml version='1.0'?>
 
 OSC2 = """<?xml version='1.0'?>
 <osmChange version="0.6">
-  <create><node id="5" lat="50.3" lon="9.3" version="1"/></create>
+  <create><node id="5" lat="50.3" lon="9.3" version="1"
+    timestamp="2024-01-01T02:00:00Z"/></create>
 </osmChange>
 """
 
@@ -173,12 +197,24 @@ OSC3 = """<?xml version='1.0'?>
 </osmChange>
 """
 
+# OPL after OSC1-3.  n2 is the OSC's object: the OSC reader sets
+# visible (true by default, as osmium does), the OPL reader only from
+# a d field, so the post-diff n2 carries dV
+POST_OPL = """n1 Tamenity=pub x9.0 y50.0
+n2 dV x9.5 y50.5
+w100 Thighway=residential Nn1,n2
+"""
 
-def _run_repl(args):
+
+def _run_repl(args, cwd=REPO):
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
+    if cwd != REPO:
+        # outside the repo only the tool itself may put the package on
+        # the path (an in-process import_tool sets PYTHONPATH here)
+        env.pop("PYTHONPATH", None)
     return subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "replication.py"), *args],
-        capture_output=True, text=True, cwd=REPO, timeout=600,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        capture_output=True, text=True, cwd=cwd, timeout=600, env=env,
     )
 
 
@@ -198,17 +234,7 @@ class TestUpdateE2E:
 
     @pytest.mark.slow
     def test_multi_batch_catchup(self, tmp_path, spark):
-        from osm2pgsql_spark.sources.opl import read_opl
-
-        # base snapshots
-        base_dir = str(tmp_path / "db")
-        os.makedirs(base_dir)
-        src = tmp_path / "base.opl"
-        src.write_text(OPL)
-        nodes, ways, rels = read_opl(spark, str(src))
-        nodes.write.parquet(os.path.join(base_dir, "nodes.parquet"))
-        ways.write.parquet(os.path.join(base_dir, "ways.parquet"))
-        rels.write.parquet(os.path.join(base_dir, "relations.parquet"))
+        base_dir = _import(spark, tmp_path, OPL, "db")
 
         # server tree with 3 diffs after the stored sequence
         server = str(tmp_path / "server")
@@ -222,8 +248,11 @@ class TestUpdateE2E:
         r = _run_repl(["init", state, "--seq", "500", "--server", server])
         assert r.returncode == 0, r.stderr[-2000:]
 
-        # max-diff-size 1 MB >> diffs: everything lands in one batch
-        r = _run_repl(["update", state, base_dir, "--max-diff-size", "1"])
+        # max-diff-size 1 MB >> diffs: everything lands in one batch.
+        # Run outside the repo: the append's Python workers must find
+        # the package without the working directory's help
+        r = _run_repl(["update", state, base_dir, "--max-diff-size", "1"],
+                      cwd=str(tmp_path))
         assert r.returncode == 0, r.stderr[-2000:]
         assert "state now at sequence 503" in r.stdout
 
@@ -232,7 +261,7 @@ class TestUpdateE2E:
         assert p.get("replication_sequence_number") == "503"
         assert p.get("replication_timestamp") == "2024-01-01T03:00:00Z"
 
-        got = spark.read.parquet(os.path.join(base_dir, "nodes.parquet"))
+        got = spark.read.parquet(os.path.join(base_dir, "middle", "nodes"))
         rows = {r["id"]: (r["lat"], r["lon"]) for r in got.collect()}
         assert rows[2] == (50.5, 9.5)  # modified
         assert 5 not in rows  # created then deleted
@@ -240,6 +269,53 @@ class TestUpdateE2E:
         r = _run_repl(["update", state, base_dir])
         assert r.returncode == 0
         assert "up-to-date" in r.stdout
+
+
+@pytest.mark.parametrize("cmd", ["update", "apply"])
+def test_update_equals_fresh_import(tmp_path, spark, monkeypatch, cmd):
+    """init + update (or apply of a diff directory) on an import_tool
+    database, with STATE its own properties.json: the appended middle
+    and output tables equal a fresh import of the post-diff OPL, and
+    the state write keeps the appends' current_timestamp."""
+    from osm2pgsql_spark import session
+    from osm2pgsql_spark.streaming.properties import Properties
+
+    repl = _tool("replication")
+    db = _import(spark, tmp_path, OPL, "db")
+    diffs = [(501, OSC1, utc(2024, 1, 1, 1)), (502, OSC2, utc(2024, 1, 1, 2)),
+             (503, OSC3, utc(2024, 1, 1, 3))]
+    server = str(tmp_path / "server")
+    write_server_tree(server, [(s, gzip.compress(x.encode()), t)
+                               for s, x, t in diffs])
+    state = os.path.join(db, "properties.json")
+    repl.cmd_init(argparse.Namespace(
+        state=state, seq=500, timestamp="", server=server, osm_file=None,
+        start_at=None))
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    if cmd == "update":
+        repl.cmd_update(argparse.Namespace(
+            state=state, base_dir=db, server=None, max_diff_size=1,
+            once=False))
+    else:
+        diff_dir = tmp_path / "diffs"
+        diff_dir.mkdir()
+        for s, x, _ in diffs:
+            (diff_dir / f"{s}.osc").write_text(x)
+        repl.cmd_apply(argparse.Namespace(
+            state=state, base_dir=db, diff_dir=str(diff_dir)))
+
+    props = Properties(state)
+    assert props.get("replication_sequence_number") == "503"
+    assert props.get("current_timestamp") == "2024-01-01T02:00:00Z"
+    fresh = _import(spark, tmp_path, POST_OPL, "fresh")
+    tool = _tool("import_tool")
+    for name in ("nodes", "ways", "rels"):
+        assert (_rows(tool._middle(db, name).read(spark))
+                == _rows(tool._middle(fresh, name).read(spark))), name
+    for name in GENERIC_TABLES:
+        got, want = (spark.read.parquet(os.path.join(d, "tables", name))
+                     for d in (db, fresh))
+        assert _rows(got) == _rows(want), name
 
 
 class TestHttpServer:
@@ -307,17 +383,9 @@ class TestUpdateOnce:
         """replication.feature 'Updates can run only once': --once with
         a tiny --max-diff-size stops after the first batch instead of
         catching up to the server head."""
-        from osm2pgsql_spark.sources.opl import read_opl
         from osm2pgsql_spark.streaming.properties import Properties
 
-        base_dir = str(tmp_path / "db")
-        os.makedirs(base_dir)
-        src = tmp_path / "base.opl"
-        src.write_text(OPL)
-        nodes, ways, rels = read_opl(spark, str(src))
-        nodes.write.parquet(os.path.join(base_dir, "nodes.parquet"))
-        ways.write.parquet(os.path.join(base_dir, "ways.parquet"))
-        rels.write.parquet(os.path.join(base_dir, "relations.parquet"))
+        base_dir = _import(spark, tmp_path, OPL, "db")
 
         server = str(tmp_path / "server")
         # incompressible padding makes each diff ~peers with the 1 MB

@@ -1,42 +1,9 @@
-"""Structured Streaming tests: diff replication via foreachBatch and
-watermarked windowed aggregation."""
+"""Structured Streaming tests: watermarked windowed aggregation,
+stateful sessionization and streaming dedup."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
-from osm2pgsql_spark.model import NODE_SCHEMA
-from osm2pgsql_spark.streaming.stream_jobs import (
-    DIFF_NODE_SCHEMA,
-    stream_node_diffs,
-    windowed_event_counts,
-)
-
-
-def _node(i, lat, lon, version=2):
-    return (i, lat, lon, {}, version, None, None, None, None, None)
-
-
-def test_stream_node_diffs(spark, tmp_path):
-    diff_dir = str(tmp_path / "diffs")
-    state = str(tmp_path / "state.parquet")
-    ckpt = str(tmp_path / "ckpt")
-
-    initial = spark.createDataFrame([_node(1, 50.0, 9.0), _node(2, 50.0, 9.1)], NODE_SCHEMA)
-    # two diff files = two logical batches
-    spark.createDataFrame([(*_node(2, 51.0, 9.5), "modify")], DIFF_NODE_SCHEMA).write.mode(
-        "append"
-    ).parquet(diff_dir)
-    spark.createDataFrame([(*_node(3, 52.0, 8.0), "create")], DIFF_NODE_SCHEMA).write.mode(
-        "append"
-    ).parquet(diff_dir)
-
-    q = stream_node_diffs(spark, diff_dir, state, ckpt, initial)
-    q.awaitTermination(60)
-
-    final = {r["id"]: (r["lat"], r["lon"]) for r in spark.read.parquet(state).collect()}
-    assert final == {1: (50.0, 9.0), 2: (51.0, 9.5), 3: (52.0, 8.0)}
+from osm2pgsql_spark.streaming.stream_jobs import windowed_event_counts
 
 
 def test_windowed_event_counts_batch_semantics(spark):

@@ -257,16 +257,6 @@ def resolve_srid(args) -> int:
     return 4326 if args.latlong else 3857
 
 
-def _last_op(diff: DataFrame) -> DataFrame:
-    """One row per id: the LAST op in document order (the reference
-    applies diff ops sequentially, src/osmdata.cpp:55-70)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(F.col("op_seq").desc())
-    return (diff.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
-
-
 def _log_table_rows(style_fn, log_tables: set,
                     n_diff, w_diff, r_diff,
                     new_nodes, new_ways, new_rels) -> dict:
@@ -286,9 +276,10 @@ def _log_table_rows(style_fn, log_tables: set,
             "style defines ids=nil log tables but is not a procedural "
             "Lua config (no deleted-object callback path)")
     from osm2pgsql_spark.operators import assembly
+    from osm2pgsql_spark.streaming.append import last_ops
 
-    last = {"n": _last_op(n_diff), "w": _last_op(w_diff),
-            "r": _last_op(r_diff)}
+    last = {"n": last_ops(n_diff), "w": last_ops(w_diff),
+            "r": last_ops(r_diff)}
 
     def ids_of(df):
         return df.select("id").distinct()
@@ -617,6 +608,7 @@ def cmd_create(args, spark) -> None:
     props = Properties(os.path.join(args.out_dir, "properties.json"))
     props.set("db_format", "parquet-v1")
     props.set("style", args.style or "generic")
+    props.set("output", out_backend)
     props.set("updatable", "false" if args.drop else "true")
     props.set("tables_format", fmt)
     props.set("attributes", "false")
@@ -790,6 +782,7 @@ def _pg_apply_append(args, new_side, log_new, keys, log_tables,
         # delete+insert flow).  Skipped when the import didn't load a
         # middle (e.g. --drop), detected from the catalog.
         from osm2pgsql_spark.sinks.pg_live import query as pg_query
+        from osm2pgsql_spark.streaming.append import last_ops
 
         prefix = getattr(args, "prefix", "planet_osm")
         schema_cond = (
@@ -803,8 +796,8 @@ def _pg_apply_append(args, new_side, log_new, keys, log_tables,
         if present and present[0][0] != "0":
             n_diff, w_diff, r_diff = diffs
             mid = _pg_middle_frames(
-                prefix, _last_op(n_diff), _last_op(w_diff),
-                _last_op(r_diff), keep_op=True)
+                prefix, last_ops(n_diff), last_ops(w_diff),
+                last_ops(r_diff), keep_op=True)
             for name, change in mid.items():
                 write_delete_before_insert(
                     change, fac, _qual(name, mid_schema), id_col="id",
@@ -817,12 +810,16 @@ def _pg_apply_append(args, new_side, log_new, keys, log_tables,
 
 def cmd_append(args, spark) -> None:
     from osm2pgsql_spark.plans.flex import touched_keys
-    from osm2pgsql_spark.streaming.append import affected_ids, apply_diff
+    from osm2pgsql_spark.streaming.append import (
+        affected_ids, apply_diff, relations_to_recompute, ways_to_recompute,
+    )
     from osm2pgsql_spark.streaming.properties import Properties
 
+    out_backend = getattr(args, "output", "flex")
     props = Properties(os.path.join(args.out_dir, "properties.json"))
     problems = props.check_compatible(
-        db_format="parquet-v1", style=args.style or "generic", updatable="true"
+        db_format="parquet-v1", style=args.style or "generic",
+        output=out_backend, updatable="true"
     )
     if problems:
         raise SystemExit("append incompatible with import: " + "; ".join(problems))
@@ -830,7 +827,6 @@ def cmd_append(args, spark) -> None:
     from osm2pgsql_spark.sources.osm_xml import read_osc_xml
 
     n_diff, w_diff, r_diff = read_osc_xml(spark, args.input)
-    out_backend = getattr(args, "output", "flex")
     if out_backend == "null":
         style_fn, id_spaces = (lambda spark, n, w, r: {}), {}
     elif out_backend == "pgsql":
@@ -838,11 +834,9 @@ def cmd_append(args, spark) -> None:
     else:
         style_fn, id_spaces = load_style(
             args.style, getattr(args, "region_db", None), mode="append")
-    incremental = args.refresh == "incremental" or (
-        args.refresh == "auto" and id_spaces is not None
-    )
-    if incremental and id_spaces is None:
-        raise SystemExit("--refresh incremental needs the style to define ID_SPACES")
+    # a style that declares its tables' id spaces refreshes only the
+    # touched rows; without them every table is re-derived in full
+    incremental = id_spaces is not None
     # ids=nil log tables (track-changes.lua): append-only — the
     # reference never deletes their rows; their new rows come from a
     # dedicated file-reading + process_deleted_* pass, never from the
@@ -863,13 +857,9 @@ def cmd_append(args, spark) -> None:
     new_ways = apply_diff(old_ways, w_diff)
     new_rels = apply_diff(old_rels, r_diff)
     sets = affected_ids(n_diff, w_diff, r_diff, new_ways, new_rels, spark=spark)
-
-    def _ids(df: DataFrame) -> DataFrame:
-        return df.select(F.col(df.columns[0]).alias("id"))
-
-    node_ids = _ids(sets.changed_nodes).distinct()
-    way_ids = _ids(sets.changed_ways).unionByName(_ids(sets.pending_ways)).distinct()
-    rel_ids = _ids(sets.changed_rels).unionByName(_ids(sets.pending_rels)).distinct()
+    node_ids = sets.changed_nodes
+    way_ids = ways_to_recompute(sets)
+    rel_ids = relations_to_recompute(sets)
     # every id-tracked table's touched keys under its own id scheme
     # (relations as -id in area tables, kind-tagged or offset ids in
     # any tables): the refresh, the output merge, the live-database
@@ -1084,7 +1074,9 @@ def _merge_tables(spark, out_dir: str, new_side: dict, log_new: dict,
     return counts
 
 
-def main() -> None:
+def arg_parser() -> argparse.ArgumentParser:
+    """The command line of main(); tools/replication.py builds its
+    append runs from it too."""
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("input")
     ap.add_argument("out_dir")
@@ -1148,12 +1140,6 @@ def main() -> None:
         help="Max size for a polygon to expire the whole polygon, not "
         "just the boundary (default: 20000).")
     ap.add_argument(
-        "--refresh", choices=("auto", "full", "incremental"), default="auto",
-        help="append table refresh: incremental (touched rows only; "
-        "needs the style's ID_SPACES) or full re-derivation; auto "
-        "picks incremental when the style allows it",
-    )
-    ap.add_argument(
         "--tables-format", choices=("plain", "merge"), default="plain",
         help="output table storage: plain parquet (append rewrites "
         "tables in full) or hash-bucketed merge snapshots (append "
@@ -1173,7 +1159,11 @@ def main() -> None:
                     help="database schema for output tables "
                     "(default: setting of --schema)")
     ap.add_argument("--number-processes", type=int, default=0)
-    args = ap.parse_args()
+    return ap
+
+
+def main() -> None:
+    args = arg_parser().parse_args()
 
     # check_options_expire (command-line-parser.cpp:229-249): clamp
     # the zoom to the 32-bit tile-index limit, and expiry needs the

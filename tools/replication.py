@@ -7,8 +7,9 @@ downloads diffs in --max-diff-size batches, applying each batch with
 `osm2pgsql --append` (scripts/osm2pgsql-replication:406-476 init,
 :478-600 update).  Here the state lives in a Properties JSON, the
 server protocol is osm2pgsql_spark.streaming.replication (pluggable
-fetch — file:// trees work offline), and each batch is applied with
-the batch-incremental machinery in streaming.append.
+fetch — file:// trees work offline), and each diff of a batch is
+applied, in sequence order, by the import tool's append
+(tools/import_tool.py cmd_append) in this tool's Spark session.
 
 Usage:
   # init from an explicit sequence, a server, or a PBF's replication header
@@ -24,20 +25,26 @@ Usage:
 
   python tools/replication.py status STATE.json [--json]
 
-BASE_DIR holds nodes/ways/relations parquet snapshots.
+BASE_DIR is a database written by tools/import_tool.py; each diff is
+appended to it with the style and output recorded in its
+properties.json.  STATE may be that same properties.json, as the
+reference keeps the replication state in the database's
+osm2pgsql_properties table.
 """
 
 from __future__ import annotations
 
 import argparse
-import gzip
 import json
 import os
 import re
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+# before any Spark session: import_tool puts the repo on sys.path and
+# on the PYTHONPATH the executors' Python workers inherit
+import import_tool  # noqa: E402
 
 DEFAULT_SERVER = "https://planet.openstreetmap.org/replication/minute"
 
@@ -49,7 +56,6 @@ def cmd_init(args) -> None:
     )
 
     p = Properties(args.state)
-    p.set("output", "flex")
 
     if args.osm_file:
         base_url, seq, ts = replication_header_from_pbf(args.osm_file)
@@ -170,42 +176,20 @@ def _start_point(param: str):
     return d
 
 
-def _load_tables(spark, base_dir):
-    def load(name):
-        return spark.read.parquet(os.path.join(base_dir, f"{name}.parquet"))
+def _append_diffs(spark, base_dir: str, paths) -> None:
+    """Append .osc(.gz) files in order to the import database at
+    base_dir, each one osm2pgsql --append run (reference update loop,
+    scripts/osm2pgsql-replication:478-600)."""
+    from osm2pgsql_spark.streaming.properties import Properties
 
-    return load("nodes"), load("ways"), load("relations")
-
-
-def _snapshot(spark, base_dir, nodes, ways, rels) -> None:
-    # write-to-temp + read-back + overwrite: crash between the two
-    # re-applies idempotent diffs (apply_diff is a keyed MERGE)
-    for name, df in (("nodes", nodes), ("ways", ways), ("relations", rels)):
-        tmp = os.path.join(base_dir, f"{name}.parquet.new")
-        df.write.mode("overwrite").parquet(tmp)
-        final = os.path.join(base_dir, f"{name}.parquet")
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(final)
-
-
-def _apply_osc_files(spark, base_dir, paths) -> int:
-    """Apply .osc(.gz) files in order onto the BASE_DIR snapshots;
-    returns the number of ways flagged for recompute by the last diff."""
-    from osm2pgsql_spark.sources.osm_xml import read_osc_xml
-    from osm2pgsql_spark.streaming.append import (
-        affected_ids, apply_diff, ways_to_recompute,
-    )
-
-    nodes, ways, rels = _load_tables(spark, base_dir)
-    n_pending = 0
+    props = Properties(os.path.join(base_dir, "properties.json"))
+    style = props.get("style")
+    opts = ["-O", props.get("output") or "flex"]
+    if style and style != "generic":
+        opts += ["-S", style]
     for path in paths:
-        node_diff, way_diff, rel_diff = read_osc_xml(spark, path)
-        nodes = apply_diff(nodes, node_diff)
-        ways = apply_diff(ways, way_diff)
-        rels = apply_diff(rels, rel_diff)
-        sets = affected_ids(node_diff, way_diff, rel_diff, ways, rels)
-        n_pending = ways_to_recompute(sets).count()
-    _snapshot(spark, base_dir, nodes, ways, rels)
-    return n_pending
+        import_tool.cmd_append(import_tool.arg_parser().parse_args(
+            [path, base_dir, "--append", *opts]), spark)
 
 
 def cmd_update(args) -> None:
@@ -244,14 +228,14 @@ def cmd_update(args) -> None:
                 with open(p, "wb") as fh:
                     fh.write(blob)
                 paths.append(p)
-            n_pending = _apply_osc_files(spark, args.base_dir, paths)
+            _append_diffs(spark, args.base_dir, paths)
         # state advances once per BATCH, like one osm2pgsql run per
-        # downloaded chunk in the reference update loop
+        # downloaded chunk in the reference update loop.  Re-read: STATE
+        # may be the database's properties.json the appends just wrote
         st = repl.get_state_info(endseq)
         ts = osm_date(st.timestamp) if st and st.timestamp else ""
-        props.update_replication_state(endseq, ts)
-        print(f"applied sequences {seq + 1}..{endseq} "
-              f"({len(diffs)} diffs, {n_pending} ways to recompute)")
+        Properties(args.state).update_replication_state(endseq, ts)
+        print(f"applied sequences {seq + 1}..{endseq} ({len(diffs)} diffs)")
         seq = endseq
         if args.once:
             break
@@ -333,10 +317,10 @@ def cmd_apply(args) -> None:
 
     spark = get_spark("osm2pgsql-replication")
     spark.sparkContext.setLogLevel("ERROR")
-    n = _apply_osc_files(spark, args.base_dir, [p for _, p in pending])
+    _append_diffs(spark, args.base_dir, [p for _, p in pending])
     seq = pending[-1][0]
-    print(f"applied {len(pending)} diffs ({n} ways to recompute)")
-    props.update_replication_state(seq, "")
+    print(f"applied {len(pending)} diffs")
+    Properties(args.state).update_replication_state(seq, "")
     print(f"state now at sequence {seq}")
 
 
